@@ -270,20 +270,40 @@ object Tables {
   }
 
   /** Session builder used by library entry points when the caller does
-    * not supply one. 32 shuffle partitions to match local[32]; AQE on
-    * so skew/coalesce decisions re-plan at runtime (the 100 TB posture:
-    * on a real cluster these same configs scale with executor count).
+    * not supply one. AQE on so skew/coalesce decisions re-plan at
+    * runtime (the 100 TB posture: on a real cluster these same configs
+    * scale with executor count).
+    *
+    *  - `spark.sql.shuffle.partitions` is the context's core count
+    *    ([[Sizing.shufflePartitions]] with no volume to size by): 32 at
+    *    the default `local[32]`, 4 at `local[4]`. Every stateful
+    *    streaming operator runs one state-store task per shuffle
+    *    partition per micro-batch, so a count above the core count makes
+    *    every batch pay several task waves over a handful of state rows.
+    *  - A streaming query's state partition count is frozen in its
+    *    checkpoint at its first batch: Spark restores it from the offset
+    *    log on restart, so a checkpoint started under another count
+    *    (e.g. 32) keeps it and its state stays readable.
+    *  - File listings stay on the driver
+    *    (`spark.sql.sources.parallelPartitionDiscovery.threshold`): with
+    *    an in-process master, the "parallel" listing job of a file-stream
+    *    micro-batch would run one-file tasks on the same cores that
+    *    execute the batch. This profile is for in-process masters;
+    *    cluster sessions are sized through [[Sizing.confFor]].
     */
   def session(master: String = "local[32]"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      Sizing.shufflePartitions(0, spark.sparkContext.defaultParallelism).toString)
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      Int.MaxValue.toString)
     // SQL names for the native expressions (idempotent; also applies
     // when getOrCreate returns a pre-existing session)
     graft.plans.GraftExtensions.register(spark)

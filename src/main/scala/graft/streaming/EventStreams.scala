@@ -3,6 +3,7 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
@@ -50,6 +51,17 @@ object EventStreams {
       .select(from_json(col("value").cast("string"), voteMessageSchema).as("m"))
       .filter(col("m").isNotNull && col("m.voted_at").isNotNull)
       .select(col("m.*"))
+
+  /** `votes` with an event-time watermark on `voted_at`, unless the
+    * column already carries one — the case for an input that went
+    * through [[dedupVotes]], so a dedup→tally query composes instead of
+    * failing with "Redefining watermark is disallowed". An inherited
+    * watermark keeps its own delay; `watermark` applies only to raw
+    * input.
+    */
+  private def votesWatermarked(votes: DataFrame, watermark: String): DataFrame =
+    if (votes.schema("voted_at").metadata.contains(EventTimeWatermark.delayKey)) votes
+    else votes.withWatermark("voted_at", watermark)
 
   /** At-least-once delivery dedup (`vote_id`) + the `unique_voter`
     * constraint (`voter_id`).
@@ -2460,8 +2472,7 @@ object EventStreams {
     */
   def votesPerCandidate(votes: DataFrame, watermark: String = "10 minutes",
       window_ : String = "1 hour"): DataFrame =
-    votes
-      .withWatermark("voted_at", watermark)
+    votesWatermarked(votes, watermark)
       .groupBy(window(col("voted_at"), window_),
         col("candidate_id"), col("candidate_name"), col("party"))
       .agg(count(lit(1)).as("vote_count"))
@@ -2475,8 +2486,7 @@ object EventStreams {
     */
   def votesPerCandidateSliding(votes: DataFrame, watermark: String = "10 minutes",
       window_ : String = "1 hour", slide: String = "30 minutes"): DataFrame =
-    votes
-      .withWatermark("voted_at", watermark)
+    votesWatermarked(votes, watermark)
       .groupBy(window(col("voted_at"), window_, slide), col("candidate_id"))
       .agg(count(lit(1)).as("vote_count"))
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
@@ -2493,8 +2503,7 @@ object EventStreams {
     */
   def turnoutByLocation(votes: DataFrame, voters: DataFrame,
       watermark: String = "10 minutes", window_ : String = "1 hour"): DataFrame =
-    votes
-      .withWatermark("voted_at", watermark)
+    votesWatermarked(votes, watermark)
       .join(voters.select(col("voter_id"), col("address_state")), Seq("voter_id"))
       .groupBy(window(col("voted_at"), window_), col("address_state"))
       .agg(count(lit(1)).as("turnout"))
@@ -2755,6 +2764,19 @@ object EventStreams {
     * 233-242`): each micro-batch merges into a parquet table keyed by
     * `key`, newest `versionCol` wins. Exactly-once composes from the
     * checkpoint (batch replays re-merge idempotently).
+    *
+    * Each micro-batch is materialized once: the batch frame re-runs its
+    * whole stateful plan on every action, so the emptiness check and
+    * the merge write would otherwise each execute the state-store stage.
+    *
+    * Reader contract: a concurrent `spark.read.parquet(path)` either
+    * returns a complete committed table (some batch's merge result,
+    * never duplicated or missing keys) or fails with a missing-file
+    * error: `FILE_NOT_EXIST` when the scan meets a file the swap moved
+    * away, a `FileNotFoundException` when schema inference does, or
+    * `PATH_NOT_FOUND` when the read lands between the two renames.
+    * Readers retry on those; there is no transaction log to pin a
+    * version.
     */
   def foreachBatchUpsert(df: DataFrame, path: String, key: String,
       versionCol: String, checkpointDir: String): StreamingQuery =
@@ -2762,11 +2784,12 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.persist()
         // no-data micro-batches (watermark ticks) must not re-read and
         // rewrite the whole table. NOTE: an if-guard, never `return` —
         // a non-local return from a closure that outlives its enclosing
         // method throws at batch time.
-        if (!batch.isEmpty) {
+        try if (batch.count() > 0) {
           val spark = batch.sparkSession
           import org.apache.hadoop.fs.Path
           import org.apache.spark.sql.expressions.Window
@@ -2823,7 +2846,7 @@ object EventStreams {
           }
           mustRename(stage, dst)
           fs.delete(prev, true)
-        }
+        } finally batch.unpersist()
         ()
       }
       .start()

@@ -711,6 +711,154 @@ class StreamingSpec extends SparkSpec {
     assert(served.map(_(2).asInstanceOf[Long]).sum === 30L)
   }
 
+  test("dedup then tally composes in one query and equals its batch twin") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def msg(i: Int) = voteJson(s"t$i", s"v$i", s"c${i % 3}", s"Cand ${i % 3}",
+      s"P${i % 3}", f"2024-05-01 10:${i % 8}%02d:00")
+    // redeliveries inside a batch and across the batch boundary, all
+    // within the watermark so the batch twin drops exactly the same rows
+    val batch1 = (0 until 30).map(msg) ++ Seq(msg(3), msg(7))
+    val batch2 = (30 until 50).map(msg) ++ Seq(msg(3), msg(31), msg(31))
+    val stream = MemoryStream[String]
+    stream.addData(batch1)
+    val q = EventStreams.runToMemory(EventStreams.votesPerCandidate(
+      EventStreams.dedupVotes(EventStreams.parseVotes(stream.toDF()))), "dedup_tally", ckpt())
+    stream.addData(batch2)
+    q.processAllAvailable()
+    val streamed = spark.table("dedup_tally")
+      .orderBy("window_start", "candidate_id").collect().toSeq.map(_.toSeq)
+    q.stop()
+    // batch twin: within-watermark dedup is stream-only; on a bounded
+    // input inside the watermark it is plain dropDuplicates
+    val batch = EventStreams.votesPerCandidate(
+      EventStreams.parseVotes((batch1 ++ batch2).toDF("value"))
+        .dropDuplicates("vote_id").dropDuplicates("voter_id"))
+      .orderBy("window_start", "candidate_id").collect().toSeq.map(_.toSeq)
+    assert(streamed === batch)
+    assert(streamed.map(_(5).asInstanceOf[Long]).sum === 50L)
+  }
+
+  test("a data batch through foreachBatchUpsert runs its stateful stage exactly once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def msg(i: Int, hour: Int) = voteJson(s"t$i", s"v$i", s"c${i % 3}", s"Cand ${i % 3}",
+      s"P${i % 3}", f"2024-05-01 $hour%02d:${i % 60}%02d:00")
+    val counter = new StateStoreTaskCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val stream = MemoryStream[String]
+      val agg = EventStreams.votesPerCandidate(EventStreams.parseVotes(stream.toDF()))
+        .withColumn("rollup_key", concat_ws("|", col("window_start"), col("candidate_id")))
+      val q = EventStreams.foreachBatchUpsert(agg,
+        Files.createTempDirectory("graft-upsert-once").toString + "/rollup",
+        key = "rollup_key", versionCol = "vote_count", checkpointDir = ckpt())
+      stream.addData((0 until 20).map(msg(_, 10)))
+      q.processAllAvailable()
+      stream.addData((20 until 30).map(msg(_, 12)))
+      q.processAllAvailable()
+      val progress = q.recentProgress.toSeq
+      q.stop()
+      counter.drain(spark)
+      val partitions = progress.last.stateOperators.head.numShufflePartitions.toInt
+      val perBatch = counter.tasksByBatch(q.id.toString)
+      val dataBatches = progress.filter(_.numInputRows > 0).map(_.batchId)
+      assert(dataBatches.size === 2)
+      dataBatches.foreach(b => assert(perBatch.get(b) === Some(partitions),
+        s"batch $b state-store tasks ${perBatch.get(b)} vs $partitions partitions"))
+      // watermark-only batches take the same single pass
+      assert(perBatch.values.forall(_ == partitions), perBatch)
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("a stateful checkpoint keeps its partition count across a session-profile change") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def msg(i: Int) = voteJson(s"t$i", s"v$i", s"c${i % 3}", s"Cand ${i % 3}",
+      s"P${i % 3}", f"2024-05-01 ${10 + i / 20}%02d:${(i * 7) % 60}%02d:00")
+    val batch1 = (0 until 25).map(msg)
+    val batch2 = (25 until 50).map(msg)
+    val checkpoint = ckpt()
+    val key = "spark.sql.shuffle.partitions"
+    val sessionParts = spark.conf.get(key)
+    def tally(s: MemoryStream[String]) =
+      EventStreams.votesPerCandidate(EventStreams.parseVotes(s.toDF()))
+    // first run under the old fixed profile: 32 state partitions
+    spark.conf.set(key, "32")
+    try {
+      val stream1 = MemoryStream[String]
+      stream1.addData(batch1)
+      EventStreams.runToMemory(tally(stream1), "ckpt_parts", checkpoint).stop()
+    } finally spark.conf.set(key, sessionParts)
+    assert(sessionParts.toInt != 32)
+    // restart under the session's own count: the offset log's 32 wins
+    val stream2 = MemoryStream[String]
+    stream2.addData(batch1)
+    stream2.addData(batch2)
+    val q2 = EventStreams.runToMemory(tally(stream2), "ckpt_parts", checkpoint)
+    val restored = q2.lastProgress.stateOperators.head.numShufflePartitions
+    val streamed = spark.table("ckpt_parts")
+      .orderBy("window_start", "candidate_id").collect().toSeq.map(_.toSeq)
+    q2.stop()
+    assert(restored === 32L)
+    val stateDirs = new java.io.File(s"$checkpoint/state/0").listFiles()
+      .filter(_.getName.forall(_.isDigit))
+    assert(stateDirs.length === 32)
+    val batch = EventStreams.votesPerCandidate(
+      EventStreams.parseVotes((batch1 ++ batch2).toDF("value")))
+      .orderBy("window_start", "candidate_id").collect().toSeq.map(_.toSeq)
+    assert(streamed === batch)
+  }
+
+  test("concurrent upsert readers see a committed table or a missing-file error") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-upsert-readers").toString + "/table"
+    val stream = MemoryStream[(Int, Int)]
+    val q = EventStreams.foreachBatchUpsert(stream.toDF().toDF("k", "v"), out,
+      key = "k", versionCol = "v", checkpointDir = ckpt())
+    // batch i upserts keys [0, 5(i+1)) at version i, so the committed
+    // table after batch i is exactly those keys, every one at version i
+    def batch(i: Int) = (0 until 5 * (i + 1)).map(k => (k, i))
+    def committed(rows: Seq[(Int, Int)]): Boolean = rows.nonEmpty && {
+      val i = rows.head._2
+      rows.sorted == batch(i)
+    }
+    stream.addData(batch(0))
+    q.processAllAvailable()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Seq[(Int, Int)]]]
+    @volatile var reading = true
+    val reader = new Thread(() =>
+      while (reading) reads.add(
+        try Right(spark.read.parquet(out).as[(Int, Int)].collect().toSeq)
+        catch { case e: Throwable => Left(e) }))
+    reader.start()
+    try (1 until 12).foreach { i =>
+      stream.addData(batch(i))
+      q.processAllAvailable()
+    } finally {
+      reading = false
+      reader.join()
+      q.stop()
+    }
+    // the kind of missing-file error a failed read raised, if it was one
+    def missingFile(t: Throwable): Option[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+        case e: org.apache.spark.SparkThrowable if Option(e.getCondition).exists(c =>
+            c.endsWith("FILE_NOT_EXIST") || c == "PATH_NOT_FOUND") => e.getCondition
+        case _: java.io.FileNotFoundException => "FileNotFoundException"
+      }
+    val all = reads.asScala.toSeq
+    val failures = all.collect { case Left(e) => e }
+    val tables = all.collect { case Right(rows) => rows }
+    failures.foreach(e => assert(missingFile(e).isDefined, e))
+    info(s"${tables.size} reads returned a table; failed: " +
+      failures.groupBy(missingFile(_).get).map { case (k, v) => s"$k x${v.size}" }.mkString(", "))
+    tables.foreach(rows => assert(committed(rows), rows.sorted))
+    assert(tables.nonEmpty)
+    assert(spark.read.parquet(out).as[(Int, Int)].collect().toSeq.sorted === batch(11))
+  }
+
   test("flatMapGroupsWithState sessionizer emits each closed session exactly once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1259,4 +1407,58 @@ class StreamingSpec extends SparkSpec {
       === labelRows(fullCcLabels(soFar)))
     q.stop()
   }
+}
+
+/** Counts, per (query id, batch id), the tasks that executed a state
+  * store: tasks of stages whose RDDs include a `StateStoreRDD` AND that
+  * opened a store. A stage that reads a persisted batch still lists the
+  * `StateStoreRDD` among its narrow ancestors, so the second condition —
+  * the stateful operator's per-task "number of state store instances"
+  * metric update — separates a real execution from a cache read.
+  */
+private class StateStoreTaskCounter extends org.apache.spark.scheduler.SparkListener {
+  import org.apache.spark.scheduler._
+  private val stageBatch = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]
+  private val tasks = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]
+  private val drainJobs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.CountDownLatch]
+  @volatile private var drainLatch: java.util.concurrent.CountDownLatch = _
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val props = Option(e.properties)
+    if (props.exists(_.getProperty(StateStoreTaskCounter.DrainKey) != null))
+      drainJobs.put(e.jobId, drainLatch)
+    for {
+      p <- props
+      query <- Option(p.getProperty("sql.streaming.queryId"))
+      batch <- Option(p.getProperty("streaming.sql.batchId"))
+      stage <- e.stageInfos if stage.rddInfos.exists(_.name == "StateStoreRDD")
+    } stageBatch.put(stage.stageId, (query, batch.toLong))
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    Option(stageBatch.get(e.stageId)).foreach { qb =>
+      if (e.taskInfo.accumulables.exists(_.name.contains("number of state store instances")))
+        tasks.merge(qb, 1, Integer.sum)
+    }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    Option(drainJobs.remove(e.jobId)).foreach(_.countDown())
+
+  /** Block until every event posted before this call was delivered:
+    * the bus delivers in order, so a marker job's end comes last. */
+  def drain(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val sc = spark.sparkContext
+    drainLatch = new java.util.concurrent.CountDownLatch(1)
+    sc.setLocalProperty(StateStoreTaskCounter.DrainKey, "1")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(StateStoreTaskCounter.DrainKey, null)
+    assert(drainLatch.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+  }
+
+  def tasksByBatch(queryId: String): Map[Long, Int] =
+    tasks.asScala.collect { case ((q, b), n) if q == queryId => b -> n }.toMap
+}
+
+private object StateStoreTaskCounter {
+  val DrainKey = "graft.spec.drain"
 }

@@ -1,0 +1,136 @@
+#!/usr/bin/env python3
+"""Per-micro-batch cost breakdown of a Spark event log.
+
+Usage: python3 tools/stage_breakdown.py EVENT_LOG [--where KEY=VALUE ...]
+                                        [--totals]
+
+EVENT_LOG is an uncompressed Spark event log (one JSON event per line),
+as written by a JVM started with
+
+    JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true \\
+      -Dspark.eventLog.compress=false -Dspark.eventLog.dir=/some/dir"
+
+either a single file or a rolling log's `eventlog_v2_<app>` directory,
+whose `events_<n>_<app>` parts are read in order.
+
+Every job is attributed through its local properties: streaming jobs
+carry `sql.streaming.queryId` and `streaming.sql.batchId`; anything else
+(driver-side reads, set-up) is grouped under query "-". One row per
+(query, batch) reports
+
+  jobs          jobs started
+  stages        stages that ran (skipped stages are not counted)
+  tasks         tasks that ended
+  task_s        summed executor run time of those tasks, seconds
+  state_tasks   tasks that opened a state store (the stateful operator's
+                "number of state store instances" metric); a stage that
+                only reads a cached batch lists the StateStoreRDD among
+                its RDDs too, so RDD membership alone would overcount
+  listing_jobs  parallel file-listing jobs ("Listing leaf files ...")
+
+followed by per-query totals and the grand total. `--where` keeps only
+jobs whose local property KEY equals VALUE (repeatable), e.g.
+`--where perfbench.phase=timed`; `--totals` prints the totals only.
+"""
+import argparse
+import json
+import os
+from collections import defaultdict
+
+QUERY = "sql.streaming.queryId"
+BATCH = "streaming.sql.batchId"
+STATE_STORES = "number of state store instances"
+COLS = ("jobs", "stages", "tasks", "task_s", "state_tasks", "listing_jobs")
+
+
+def breakdown(lines, where):
+    stage_owner = {}   # stage id -> (query, batch) of the latest job listing it
+    ran = {}           # (stage id, attempt) -> (query, batch) it ran for
+    rows = defaultdict(lambda: dict.fromkeys(COLS, 0))
+    for line in lines:
+        e = json.loads(line)
+        kind = e.get("Event")
+        if kind == "SparkListenerJobStart":
+            props = e.get("Properties") or {}
+            if any(props.get(k) != v for k, v in where):
+                for sid in e["Stage IDs"]:
+                    stage_owner.pop(sid, None)
+                continue
+            key = (props.get(QUERY, "-"), props.get(BATCH, "-"))
+            row = rows[key]
+            row["jobs"] += 1
+            if props.get("spark.job.description", "").startswith("Listing leaf files"):
+                row["listing_jobs"] += 1
+            for sid in e["Stage IDs"]:
+                stage_owner[sid] = key
+        elif kind == "SparkListenerStageSubmitted":
+            info = e["Stage Info"]
+            key = stage_owner.get(info["Stage ID"])
+            if key is not None:
+                ran[(info["Stage ID"], info["Stage Attempt ID"])] = key
+                rows[key]["stages"] += 1
+        elif kind == "SparkListenerTaskEnd":
+            key = ran.get((e["Stage ID"], e["Stage Attempt ID"]))
+            if key is not None:
+                row = rows[key]
+                row["tasks"] += 1
+                row["task_s"] += (e.get("Task Metrics") or {}).get("Executor Run Time", 0) / 1e3
+                accs = (e.get("Task Info") or {}).get("Accumulables", [])
+                if any(a.get("Name") == STATE_STORES for a in accs):
+                    row["state_tasks"] += 1
+    return rows
+
+
+def event_lines(path):
+    if not os.path.isdir(path):
+        with open(path) as f:
+            yield from f
+        return
+    parts = [n for n in os.listdir(path) if n.startswith("events_")]
+    for name in sorted(parts, key=lambda n: int(n.split("_")[1])):
+        with open(os.path.join(path, name)) as f:
+            yield from f
+
+
+def batch_order(key):
+    query, batch = key
+    return (query == "-", query, int(batch) if batch.isdigit() else -1)
+
+
+def fmt(label, batch, row):
+    return "%-36s %6s %5d %6d %6d %8.2f %11d %12d" % (
+        label, batch, row["jobs"], row["stages"], row["tasks"], row["task_s"],
+        row["state_tasks"], row["listing_jobs"])
+
+
+def main():
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("log")
+    p.add_argument("--where", action="append", default=[], metavar="KEY=VALUE")
+    p.add_argument("--totals", action="store_true")
+    args = p.parse_args()
+    where = [w.split("=", 1) for w in args.where]
+    rows = breakdown(event_lines(args.log), where)
+
+    print("%-36s %6s %5s %6s %6s %8s %11s %12s" % (("query", "batch") + COLS))
+    per_query = defaultdict(lambda: dict.fromkeys(COLS, 0))
+    batches = defaultdict(int)
+    for key in sorted(rows, key=batch_order):
+        query, batch = key
+        for c in COLS:
+            per_query[query][c] += rows[key][c]
+        batches[query] += 1
+        if not args.totals:
+            print(fmt(query, batch, rows[key]))
+    print()
+    total = dict.fromkeys(COLS, 0)
+    for query in sorted(per_query, key=lambda q: (q == "-", q)):
+        for c in COLS:
+            total[c] += per_query[query][c]
+        label = query if query == "-" else "%s (%d batches)" % (query[:8], batches[query])
+        print(fmt(label, "all", per_query[query]))
+    print(fmt("total", "all", total))
+
+
+if __name__ == "__main__":
+    main()
