@@ -161,13 +161,7 @@ object Amplify {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/root/repo/target/scale10x")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, base, out, copies)
     println(s"""{"amplified":"$out","base":"$base","copies":$copies}""")

@@ -44,25 +44,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.plans.ScaleGuard.FailOnGlobalWindow, "true")
-      .getOrCreate()
+    val spark = graft.engine.Tables.session()
+    // the benched surface is gated by the no-global-window rule, not
+    // just by PlanShapeSpec: an accidental Window.orderBy fails the run
+    spark.conf.set(graft.plans.ScaleGuard.FailOnGlobalWindow, "true")
     spark.sparkContext.setLogLevel("WARN")
     // per-hop loop tracing for this JVM: when a loop query tail-spikes
     // in a RECORDED run, the stderr log carries the hop-level wall/GC/
     // storage breakdown needed to attribute it (r13 verdict #1)
     System.setProperty("graft.loop.trace", "1")
-    // the benched surface is gated by the no-global-window rule, not
-    // just by PlanShapeSpec: an accidental Window.orderBy fails the run
-    graft.plans.ScaleGuard.install(spark)
     // the noop sink materialises every output column AND the final
     // sort/projection — .count() let Catalyst prune both, so a query
     // whose cost lives in its signature columns benched as a row scan

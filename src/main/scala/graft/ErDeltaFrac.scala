@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** AFFECTED-FRACTION probe for catalog-delta re-verdicting (r14
   * verdict #2's scale evidence): for the base fixture and each
   * amplified fixture present under target/, print one JSON line with
@@ -28,15 +26,7 @@ import org.apache.spark.sql.SparkSession
 object ErDeltaFrac {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("WARN")
     val er = graft.operators.EntityResolution
     val fixedDelta = er.catalogDeltaOf(spark, base).localCheckpoint()

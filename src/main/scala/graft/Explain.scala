@@ -11,7 +11,7 @@ object Explain {
     val verbose = args.contains("-v")
     val names = args.filterNot(_ == "-v")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = graft.engine.Tables.session("local[8]")
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     val selected =
       if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)

@@ -8,8 +8,7 @@ package graft
   */
 object LoopProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.engine.Tables.session(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, String)]()

@@ -266,7 +266,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft-pipeline-out")
-    val spark = graft.engine.Tables.session("local[8]")
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     val (df, funnel) = run(spark, dir)
     funnel.foreach(s => println(f"${s.stage}%-16s ${s.docs}%7d docs"))

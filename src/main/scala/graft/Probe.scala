@@ -15,8 +15,7 @@ object Probe {
     val name = args.headOption.getOrElse("ann_ivfpq_topk")
     val reps = if (args.length > 1) args(1).toInt else 2
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.engine.Tables.session(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var log = List.empty[(Int, Double, String)]

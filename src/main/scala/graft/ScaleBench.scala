@@ -220,21 +220,11 @@ object ScaleBench {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/root/repo/target/scale10x")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.plans.ScaleGuard.FailOnGlobalWindow, "true")
-      .getOrCreate()
+    val spark = graft.engine.Tables.session()
+    spark.conf.set(graft.plans.ScaleGuard.FailOnGlobalWindow, "true")
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.ScaleGuard.install(spark)
 
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(out))) {
       System.err.println(s"[scale] amplifying $base x$copies -> $out")

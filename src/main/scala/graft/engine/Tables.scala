@@ -269,14 +269,18 @@ object Tables {
         f"rdds=${spark.sparkContext.getPersistentRDDs.size}")
   }
 
-  /** Session builder used by library entry points when the caller does
-    * not supply one. AQE on so skew/coalesce decisions re-plan at
-    * runtime (the 100 TB posture: on a real cluster these same configs
-    * scale with executor count).
+  /** The one session profile: every main, spec and probe builds its
+    * session here, so only the master differs between them. AQE on so
+    * skew/coalesce decisions re-plan at runtime (the 100 TB posture:
+    * on a real cluster these same configs scale with executor count).
     *
+    *  - The default master is `local[N]` with N from the
+    *    `SPARK_GRAFT_CPUS` environment variable, or `local[*]` when it
+    *    is unset: the deployment setting for every main, read nowhere
+    *    else.
     *  - `spark.sql.shuffle.partitions` is the context's core count
     *    ([[Sizing.shufflePartitions]] with no volume to size by): 32 at
-    *    the default `local[32]`, 4 at `local[4]`. Every stateful
+    *    `local[32]`, 4 at `local[4]`. Every stateful
     *    streaming operator runs one state-store task per shuffle
     *    partition per micro-batch, so a count above the core count makes
     *    every batch pay several task waves over a handful of state rows.
@@ -290,8 +294,13 @@ object Tables {
     *    micro-batch would run one-file tasks on the same cores that
     *    execute the batch. This profile is for in-process masters;
     *    cluster sessions are sized through [[Sizing.confFor]].
+    *  - The native `graft_*` SQL names and the no-global-window guard
+    *    are registered ([[graft.plans.GraftExtensions.register]]). The
+    *    guard stays off until a caller sets
+    *    `spark.graft.failOnGlobalWindow=true` (Bench, Verify, ScaleBench).
     */
-  def session(master: String = "local[32]"): SparkSession = {
+  def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
+      : SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -304,8 +313,9 @@ object Tables {
       Sizing.shufflePartitions(0, spark.sparkContext.defaultParallelism).toString)
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
       Int.MaxValue.toString)
-    // SQL names for the native expressions (idempotent; also applies
-    // when getOrCreate returns a pre-existing session)
+    // SQL names for the native expressions and the window guard
+    // (idempotent; also applies when getOrCreate returns a
+    // pre-existing session)
     graft.plans.GraftExtensions.register(spark)
     spark
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.streaming.EventStreams
 
 /** Batch twins of the reference's declared streaming aggregations
   * (`README.md:116-118`, report §3.3: tumbling + sliding windows;
@@ -16,17 +17,13 @@ import graft.engine.Tables
 object WindowedEvents {
 
   /** Tumbling 1-hour window per event type —
-    * `aggregated_votes_per_candidate` (`README.md:116-117`).
+    * `aggregated_votes_per_candidate` (`README.md:116-117`). The
+    * streaming operator itself over the bounded table: the analyzer
+    * drops `withWatermark` on a batch frame.
     */
-  def tumblingHourly(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.load(spark, dir, "events")
-      .groupBy(window($"ts", "1 hour"), $"event_type")
-      .agg(count(lit(1)).as("cnt"))
-      .select($"window.start".as("window_start"), $"window.end".as("window_end"),
-        $"event_type", $"cnt")
-      .orderBy($"window_start", $"event_type")
-  }
+  def tumblingHourly(spark: SparkSession, dir: String): DataFrame =
+    EventStreams.trendingCounts(Tables.load(spark, dir, "events"))
+      .orderBy(col("window_start"), col("event_type"))
 
   /** Sliding 1-hour window, 30-minute slide (report §3.3 "sliding and
     * tumbling intervals") — each event lands in exactly two windows.
@@ -48,7 +45,7 @@ object WindowedEvents {
     * counts re-ranked inside each closed window (count desc, type asc
     * — a total order, so ties cannot break differently across
     * engines). The rank step is
-    * [[graft.streaming.EventStreams.rankClosedWindows]], SHARED with
+    * [[EventStreams.rankClosedWindows]], SHARED with
     * the streaming sink's foreachBatch body: windows close at the
     * watermark and re-rank downstream, so the live ranking and this
     * backfill are the same code path by construction (parity spec).
@@ -57,7 +54,7 @@ object WindowedEvents {
     */
   def trendingHourly(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.streaming.EventStreams.rankClosedWindows(tumblingHourly(spark, dir))
+    EventStreams.rankClosedWindows(tumblingHourly(spark, dir))
       .orderBy($"window_start", $"rnk")
   }
 
@@ -317,26 +314,24 @@ object WindowedEvents {
   /** Hourly DRIFT monitor — the batch backfill of the streaming drift
     * sink: per (hour window, event type), the total-variation distance
     * (integer ppm) between the hour's `floor(value)` bucket
-    * distribution and the corpus-wide baseline distribution. The
-    * rollup step is [[graft.streaming.EventStreams.tvAgainstBaseline]],
-    * SHARED with the streaming `driftCells` sink's foreachBatch body —
-    * live and backfill agree by construction (the trendingHourly
-    * pattern); the corpus-scaled work is two keyed aggregates, the
-    * baseline is broadcast.
+    * distribution and the corpus-wide baseline distribution. The cells
+    * are [[EventStreams.driftCells]] over the bounded table and the
+    * rollup step is [[EventStreams.tvAgainstBaseline]] — both the
+    * streaming drift sink's own code, so live and backfill agree by
+    * construction (the trendingHourly pattern); the corpus-scaled work
+    * is two keyed aggregates, the baseline is broadcast.
     */
   def driftHourly(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ev = Tables.load(spark, dir, "events")
-      .select($"event_type", window($"ts", "1 hour")("start").as("window_start"),
-        expr("CAST(floor(value) AS BIGINT)").as("bucket"))
-    val cells = ev.groupBy($"window_start", $"event_type", $"bucket")
-      .agg(count(lit(1)).as("n"))
-    val base0 = ev.groupBy($"event_type", $"bucket").agg(count(lit(1)).as("c"))
+    val events = Tables.load(spark, dir, "events")
+    val base0 = events
+      .groupBy($"event_type", expr("CAST(floor(value) AS BIGINT)").as("bucket"))
+      .agg(count(lit(1)).as("c"))
     val baseline = base0
       .join(broadcast(base0.groupBy($"event_type").agg(sum($"c").as("ct"))),
         Seq("event_type"))
       .select($"event_type", $"bucket", expr("(c * 1000000) div ct").as("base_ppm"))
-    graft.streaming.EventStreams.tvAgainstBaseline(cells, baseline)
+    EventStreams.tvAgainstBaseline(EventStreams.driftCells(events), baseline)
   }
 
   /** SESSION-SHAPE rollup — the engagement data-card row on top of

@@ -2382,6 +2382,8 @@ object EventStreams {
     * (or any downstream batch step) then applies
     * [[tvAgainstBaseline]] with the broadcast baseline — state per
     * open window is the bucket-count map, evicted at the watermark.
+    * The batch backfill (`WindowedEvents.driftHourly`) runs this same
+    * function over the bounded table.
     */
   def driftCells(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events
@@ -2438,7 +2440,8 @@ object EventStreams {
     * the close, in the sink's foreachBatch, as [[rankClosedWindows]]
     * — the SAME function the batch twin
     * (`WindowedEvents.trendingHourly`) ranks with, making live ≡
-    * backfill by construction. State per open (window, type) is one
+    * backfill by construction; that twin's counts are this function
+    * over the bounded table. State per open (window, type) is one
     * count row, evicted at expiry.
     */
   def trendingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
@@ -2609,15 +2612,15 @@ object EventStreams {
     * open gap-disjoint fragments (bounded: fragments are at least gap
     * apart, all above watermark − gap). `session_end` is the last
     * event's timestamp (not last + gap). The gap boundary matches the
-    * native operator: an event at exactly last + gap MERGES.
+    * native operator: an event at exactly last + gap MERGES. Composes
+    * after [[dedupVotes]] in one query (its watermark is kept).
     */
   def voterSessions(votes: DataFrame, gapMinutes: Int = 30,
       watermark: String = "10 minutes"): Dataset[VoterSession] = {
     val spark = votes.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60000L
-    votes
-      .withWatermark("voted_at", watermark)
+    votesWatermarked(votes, watermark)
       .select($"voter_id", $"voted_at")
       .as[(String, java.sql.Timestamp)]
       .groupByKey(_._1)

@@ -31,8 +31,7 @@ object SnapshotFixtures {
       .load()
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.engine.Tables.session(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    val spark = graft.engine.Tables.session()
     spark.sparkContext.setLogLevel("WARN")
     // one file: DuckDB's read_parquet glob stays trivial and the
     // committed fixture is a single reviewable blob

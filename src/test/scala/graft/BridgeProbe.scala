@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -15,11 +14,7 @@ import graft.operators.Dedup
   */
 object BridgeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .appName("bridge-probe").getOrCreate()
+    val spark = graft.engine.Tables.session("local[8]")
     import spark.implicits._
 
     def cycleText(words: Seq[String], reps: Int): String =

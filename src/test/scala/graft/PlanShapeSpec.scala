@@ -91,7 +91,6 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.plans.ScaleGuard.install(spark)
     spark.conf.set(graft.plans.ScaleGuard.FailOnGlobalWindow, "true")
     try {
       val df = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")

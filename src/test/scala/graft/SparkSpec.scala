@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs. getOrCreate so all suites in the
-  * forked test JVM share one context.
+/** Shared local session for specs: the mains' profile at `local[4]`.
+  * getOrCreate so all suites in the forked test JVM share one context.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.engine.Tables.session("local[4]")
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -737,6 +738,37 @@ class StreamingSpec extends SparkSpec {
       .orderBy("window_start", "candidate_id").collect().toSeq.map(_.toSeq)
     assert(streamed === batch)
     assert(streamed.map(_(5).asInstanceOf[Long]).sum === 50L)
+  }
+
+  test("dedup then voterSessions composes in one query and equals sessions over deduped rows") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val batch1 = Seq(
+      voteJson("t1", "v1", "c1", "A", "P", "2024-05-01 10:00:00"),
+      voteJson("t2", "v2", "c1", "A", "P", "2024-05-01 10:05:00"))
+    // t1 redelivered in the next batch: without the dedup state v1's
+    // session would count it twice
+    val batch2 = Seq(
+      voteJson("t1", "v1", "c1", "A", "P", "2024-05-01 10:00:00"),
+      voteJson("t3", "v3", "c2", "B", "Q", "2024-05-01 10:20:00"))
+    // a vote a day later moves the watermark past every session above
+    val closer = Seq(voteJson("t9", "v9", "c1", "A", "P", "2024-05-02 10:00:00"))
+    def sessions(name: String, batches: Seq[Seq[String]], pipeline: DataFrame => DataFrame) = {
+      val stream = MemoryStream[String]
+      val q = pipeline(EventStreams.parseVotes(stream.toDF()))
+        .writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName(name).option("checkpointLocation", ckpt()).start()
+      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+      q.stop()
+      spark.table(name).orderBy("voter_id", "session_start")
+        .collect().toSeq.map(_.toSeq)
+    }
+    val composed = sessions("dedup_sessions", Seq(batch1, batch2, closer),
+      v => EventStreams.voterSessions(EventStreams.dedupVotes(v)).toDF())
+    val overDeduped = sessions("deduped_sessions", Seq(batch1, batch2.tail, closer),
+      v => EventStreams.voterSessions(v).toDF())
+    assert(composed === overDeduped)
+    assert(composed.map(r => (r(0), r(3))) === Seq(("v1", 1L), ("v2", 1L), ("v3", 1L)))
   }
 
   test("a data batch through foreachBatchUpsert runs its stateful stage exactly once") {

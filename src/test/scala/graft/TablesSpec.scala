@@ -78,4 +78,32 @@ class TablesSpec extends SparkSpec {
     val e = intercept[RuntimeException](Tables.load(spark, dir, "events"))
     assert(e.getMessage.contains("unsupported events.ts encoding"))
   }
+
+  test("the spec session is the Tables.session profile") {
+    // native SQL names resolve with no explicit register call
+    assert(spark.sql("SELECT graft_hamming64(5L, 6L)").head.getLong(0) === 2L)
+    def guards = spark.experimental.extraOptimizations
+      .count(_.isInstanceOf[graft.plans.NoGlobalWindowGuard])
+    assert(guards === 1)
+    Tables.session("local[4]")
+    assert(guards === 1, "a second session() call must not stack the guard")
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ===
+      spark.sparkContext.defaultParallelism)
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt ===
+      Int.MaxValue)
+  }
+
+  test("only Tables.scala builds a session or reads the core-count variable") {
+    import scala.jdk.CollectionConverters._
+    // split so this file does not match its own needles
+    val needles = Seq("SparkSession" + ".builder", "SPARK_GRAFT" + "_CPUS")
+    val roots = Seq("src/main", "src/test").map(java.nio.file.Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from the test cwd"))
+    val hits = roots.flatMap { r =>
+      val walk = Files.walk(r)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally walk.close()
+    }.filter(f => needles.exists(Files.readString(f).contains)).map(_.toString).sorted
+    assert(hits === Seq("src/main/scala/graft/engine/Tables.scala"))
+  }
 }
