@@ -95,7 +95,7 @@ object Layouts {
     * span-pair graph, the minhash-LSH and shingle pair relations) so
     * key format and temp-dir lifecycle live in one place. Keyed by
     * application id — a fresh session re-materializes — AND by
-    * [[fixtureFingerprint]] of the key when it is a directory, so
+    * [[fixtureFingerprint]] of the key when it is a path, so
     * regenerating fixture files at the SAME path within a long-lived
     * application cannot silently serve a stale layout.
     *
@@ -110,15 +110,21 @@ object Layouts {
   private val layoutOnceCache = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CompletableFuture[String]]()
 
-  /** Cheap staleness token for a fixture directory: a hash of the
-    * sorted (relative name, size, mtime-millis) listing, "" for paths
-    * that are not readable directories (opaque keys pass through
-    * unfingerprinted). Re-listing ~10 fixture files per lookup is
-    * noise next to a Spark action; a regenerated file flips the token
-    * and the next lookup re-derives instead of serving stale data.
+  /** Cheap staleness token for a fixture path: for a directory, a hash
+    * of the sorted (relative name, size, mtime-millis) listing; for a
+    * regular file, its own size and mtime-millis; "" for anything else
+    * (opaque keys pass through unfingerprinted). Re-listing ~10
+    * fixture files per lookup is noise next to a Spark action; a
+    * regenerated file flips the token and the next lookup re-derives
+    * instead of serving stale data. The one token shared by
+    * [[layoutOnce]], the ANN model cache and [[Tables.parquet]]'s
+    * schema memo.
     */
   private[graft] def fixtureFingerprint(key: String): String = {
     val p = java.nio.file.Paths.get(key)
+    if (java.nio.file.Files.isRegularFile(p))
+      return s"${java.nio.file.Files.size(p)}:" +
+        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
     if (!java.nio.file.Files.isDirectory(p)) return ""
     val walk = java.nio.file.Files.walk(p, 2)
     try {
@@ -156,7 +162,7 @@ object Layouts {
       }
       fresh
     }
-    spark.read.parquet(slot.join())
+    Tables.parquet(spark, slot.join())
   }
 
   /** Drop layouts this application derived (all of them, or one

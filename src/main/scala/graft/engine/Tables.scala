@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table loaders for the driver's star-schema testdata (TESTDATA.md).
   *
@@ -15,9 +15,82 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Read table `name` of the fixture under `dir`, through [[parquet]]:
+    * the table's schema is inferred once per (application, path, file
+    * fingerprint, inference confs), and the data itself is re-listed
+    * and re-scanned on every call.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") normalizeEventsTs(readEvents(spark, s"$dir/$name.parquet"))
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** The session confs parquet schema inference reads: the same file
+    * infers to a different schema when one of them changes (e.g.
+    * TIMESTAMP(NANOS) is an error without `nanosAsLong`, a long with it).
+    */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String, Seq[String]), StructType]()
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    *
+    * Spark runs parquet schema inference as a one-task Spark job on
+    * every `spark.read.parquet` with no declared schema, even for a
+    * single file (about 70 ms of job and driver time at local[4]; a
+    * query loading 7 tables 14 times paid it 14 times). Here the
+    * inferred `StructType` is memoized and the read declares it, which
+    * launches no job.
+    *
+    * Memo contract:
+    *  - the key is the application id, the path,
+    *    [[Layouts.fixtureFingerprint]] of the path (size and mtime of
+    *    every file under it) and the values of [[InferenceConfs]], so a
+    *    new session, a rewritten file or a changed inference conf
+    *    infers again;
+    *  - only the schema is kept: the returned frame is a fresh read, so
+    *    the files are listed, fingerprinted and scanned on every call,
+    *    and no DataFrame, plan, listing or result outlives the call.
+    *    This is metadata reuse, not result caching: a rewrite with the
+    *    same schema is read in full, and one with another schema
+    *    re-infers;
+    *  - inference runs outside any map lock; two threads racing on a
+    *    cold key may both infer, which is harmless (same schema);
+    *  - entries are not evicted: one small `StructType` per path and
+    *    file version read in the application;
+    *  - a cold key's inference job carries the description
+    *    `graft.schema <path>`, and the thread's prior description is
+    *    restored after it.
+    *
+    * Use it for paths read more than once (fixture tables, derive-once
+    * layouts, stream-constant side tables), not for a table rewritten
+    * between every pair of reads.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (spark.sparkContext.applicationId, path, Layouts.fixtureFingerprint(path),
+      InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+    val known = schemaMemo.get(key)
+    val schema = if (known != null) known else {
+      val inferred = inferSchema(spark, path)
+      schemaMemo.put(key, inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private def inferSchema(spark: SparkSession, path: String): StructType = {
+    val sc = spark.sparkContext
+    val descKey = "spark.job.description"
+    val prior = sc.getLocalProperty(descKey)
+    sc.setJobDescription(s"graft.schema $path")
+    try spark.read.parquet(path).schema
+    finally sc.setLocalProperty(descKey, prior)
+  }
 
   /** Read events.parquet, tolerating a TIMESTAMP(NANOS) `ts` column.
     * Spark's reader rejects parquet nanos unless
@@ -27,14 +100,11 @@ object Tables {
     * touched on the retry path, never as an unconditional side effect.
     */
   private def readEvents(spark: SparkSession, path: String): DataFrame =
-    try {
-      val df = spark.read.parquet(path)
-      df.schema // schema resolution is lazy-ish; force it inside the try
-      df
-    } catch {
+    try parquet(spark, path)
+    catch {
       case e: Throwable if e.getMessage != null && e.getMessage.contains("NANOS") =>
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(path)
+        parquet(spark, path)
     }
 
   /** Normalize `ts` to microsecond TIMESTAMP_NTZ regardless of the
@@ -226,12 +296,46 @@ object Tables {
     * CacheManager first; everything left is orphaned by definition.
     * Returns the number of RDDs dropped (the leak magnitude, logged
     * by the bench for the honesty ledger).
+    *
+    * It also lets Spark's ContextCleaner finish with the finished
+    * query ([[settleCleaner]]). Its broadcast relations, shuffle files
+    * and metric accumulators are tracked only by weak reference: they
+    * stay in the block manager until a collection clears those
+    * references, and the cleaner then removes them through the block
+    * manager's thread pools (up to 100 threads each). Left alone, that
+    * removal runs inside whatever comes next: the next query, or a
+    * caller's heap reading, where each full collection releases one
+    * more part of it.
     */
   def dropOrphanRdds(spark: SparkSession): Int = {
     val rdds = spark.sparkContext.getPersistentRDDs
     rdds.values.foreach(_.unpersist(blocking = false))
+    settleCleaner(spark)
     rdds.size
   }
+
+  /** How long the ContextCleaner must have finished nothing to count as
+    * done with what a collection handed it, and the cap on the wait. */
+  private val CleanerQuietNs = 100L * 1000 * 1000
+  private val CleanerSettleMaxNs = 2000L * 1000 * 1000
+
+  /** Run a full collection, then wait until Spark's ContextCleaner has
+    * finished no cleanup for [[CleanerQuietNs]] (at most
+    * [[CleanerSettleMaxNs]] in all). The cleaner removes each
+    * broadcast with one blocking round trip; the analytics slice's
+    * few dozen broadcasts and shuffles per query take about 0.1 s at
+    * local[4]. The removed blocks are then plain garbage for the
+    * caller's next collection. No-op when the context runs no cleaner.
+    */
+  private def settleCleaner(spark: SparkSession): Unit =
+    org.apache.spark.sql.graftbridge.Bridge.cleanerClock(spark.sparkContext).foreach { clock =>
+      val start = System.nanoTime()
+      System.gc()
+      val collected = System.nanoTime()
+      def settled(now: Long): Boolean =
+        now - math.max(collected, clock.get) >= CleanerQuietNs || now - start >= CleanerSettleMaxNs
+      while (!settled(System.nanoTime())) Thread.sleep(5)
+    }
 
   /** Opt-in per-hop tracing for the iterative loops (set system
     * property `graft.loop.trace`; the bench sets it for its JVM).

@@ -988,7 +988,8 @@ object EventStreams {
     // `_` prefix hides it from the layout's recursive read (Spark's
     // file index skips `_`/`.`-prefixed paths), and compactDeltaTree
     // folds recognized generation dirs only. Each batch pays two
-    // dimension-sized scans.
+    // dimension-sized scans; their schemas are inferred once
+    // (Tables.parquet), not per batch.
     val spark = mentions.sparkSession
     val (ck0, kept0) = graft.operators.EntityResolution.catalogKeys(
       spark.read.parquet(catalogDir).select(col("ent_name"), col("ent_id")))
@@ -1000,8 +1001,8 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val m = batch.select(col("mention_id"), col("true_name"), col("mention"))
         graft.operators.EntityResolution.matchAgainstKeys(m,
-            spark.read.parquet(s"$keysDir/ck"),
-            spark.read.parquet(s"$keysDir/kept"))
+            graft.engine.Tables.parquet(spark, s"$keysDir/ck"),
+            graft.engine.Tables.parquet(spark, s"$keysDir/kept"))
           .drop("true_name") // the fixed-catalog layout's 5-col schema
           .write.mode("overwrite").parquet(s"$layoutDir/b$batchId")
         ()

@@ -14,6 +14,10 @@ import graft.engine.Tables
   * native timestamp[us] (round 9+). `Tables.load` must yield identical
   * microsecond TIMESTAMP_NTZ values from every physical encoding it can
   * meet, rather than hard-coding the one it last saw.
+  *
+  * Also pins the schema memo of `Tables.parquet`: a warm load launches
+  * no Spark job, and a rewritten file is read with its new schema; and
+  * that `dropOrphanRdds` leaves no dropped broadcast to the cleaner.
   */
 class TablesSpec extends SparkSpec {
 
@@ -105,5 +109,140 @@ class TablesSpec extends SparkSpec {
       finally walk.close()
     }.filter(f => needles.exists(Files.readString(f).contains)).map(_.toString).sorted
     assert(hits === Seq("src/main/scala/graft/engine/Tables.scala"))
+  }
+
+  /** A one-file parquet directory written by Spark at `path`, its
+    * columns given as (name, expression over `spark.range(n)`'s `id`). */
+  private def writeTable(path: String, n: Int, cols: (String, String)*): Unit =
+    spark.range(n).selectExpr(cols.map { case (name, e) => s"$e AS $name" }: _*)
+      .coalesce(1).write.mode("overwrite").parquet(path)
+
+  test("a warm Tables.load launches no schema-inference job and keeps the inferred schema") {
+    val dir = Files.createTempDirectory("graft-schema-memo").toString
+    val path = s"$dir/t.parquet"
+    writeTable(path, 5, "k" -> "id", "s" -> "CAST(id AS STRING)",
+      "d" -> "CAST(id AS DECIMAL(18,2))", "n" -> "IF(id > 2, NULL, id)")
+    val counter = new JobCounter(spark)
+    val sc = spark.sparkContext
+    sc.setJobDescription("outer work")
+    val cold = try counter.jobsDuring(Tables.load(spark, dir, "t"))
+      finally {
+        assert(sc.getLocalProperty("spark.job.description") === "outer work",
+          "the inference job must restore the prior job description")
+        sc.setJobDescription(null)
+      }
+    assert(cold === Seq(s"graft.schema $path"), "one named inference job on a cold key")
+    val (warm, df) = counter.jobsAndValue(Tables.load(spark, dir, "t"))
+    assert(warm === Seq.empty, "a warm load must not infer again")
+    // StructField equality covers name, type, nullability and metadata
+    assert(df.schema === spark.read.parquet(path).schema)
+    assert(df.orderBy("k").collect().map(_.getLong(0)).toSeq === (0L until 5L))
+  }
+
+  test("a table rewritten at the same path loads with its new schema and rows") {
+    // both layouts a fixture table can have: a Spark-written directory
+    // and a single regular file (the fingerprint is the file's own
+    // size and mtime)
+    for (asFile <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-schema-rewrite").toString
+      val path = s"$dir/t.parquet"
+      def write(n: Int, cols: (String, String)*): Unit =
+        if (!asFile) writeTable(path, n, cols: _*)
+        else {
+          val staged = Files.createTempDirectory("graft-schema-stage").resolve("t")
+          writeTable(staged.toString, n, cols: _*)
+          val part = Files.list(staged).filter(_.toString.endsWith(".parquet")).findFirst.get
+          Files.copy(part, java.nio.file.Paths.get(path),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+      write(3, "a" -> "id", "b" -> "CAST(id AS STRING)")
+      assert(Tables.load(spark, dir, "t").schema.fieldNames.toSeq === Seq("a", "b"))
+      write(4, "a" -> "id", "c" -> "CAST(id AS DOUBLE)", "e" -> "CAST(id AS INT)")
+      val again = Tables.load(spark, dir, "t")
+      assert(again.schema.fieldNames.toSeq === Seq("a", "c", "e"), s"asFile=$asFile")
+      assert(again.schema === spark.read.parquet(path).schema, s"asFile=$asFile")
+      // same schema, other rows: the data is read afresh on every load
+      write(6, "a" -> "id * 10", "c" -> "CAST(id AS DOUBLE)", "e" -> "CAST(id AS INT)")
+      assert(Tables.load(spark, dir, "t").orderBy("a").collect().map(_.getLong(0)).toSeq ===
+        (0L until 60L by 10L), s"asFile=$asFile")
+    }
+  }
+
+  test("dropOrphanRdds returns after the context cleaner removed a dropped broadcast") {
+    val sc = spark.sparkContext
+    def storageUsed(): Long =
+      sc.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum
+    Tables.dropOrphanRdds(spark)
+    val before = storageUsed()
+    // 8 MiB of incompressible longs, so the serialized pieces the block
+    // manager reports are ~8 MiB too; nothing references the broadcast
+    // once this returns
+    def broadcastAndDrop(): Unit = {
+      sc.broadcast(Array.tabulate(1 << 20)(i => i * 0x9E3779B97F4A7C15L))
+      ()
+    }
+    broadcastAndDrop()
+    assert(storageUsed() - before > (4L << 20), "the pieces are in the block manager")
+    Tables.dropOrphanRdds(spark)
+    assert(storageUsed() - before < (1L << 20), "the cleaner removed the dropped broadcast")
+  }
+
+  test("building DataQuality.fkOrphans a second time launches no job") {
+    // a star-schema fixture holding exactly the audited key columns
+    val dir = Files.createTempDirectory("graft-fk-fixture").toString
+    graft.operators.DataQuality.FkRelations
+      .flatMap { case (child, fk, parent, pk) => Seq(child -> fk, parent -> pk) }
+      .groupBy(_._1).foreach { case (table, cols) =>
+        writeTable(s"$dir/$table.parquet", 3, cols.map(_._2).distinct.map(c => c -> "id"): _*)
+      }
+    graft.operators.DataQuality.fkOrphans(spark, dir)
+    val counter = new JobCounter(spark)
+    assert(counter.jobsDuring(graft.operators.DataQuality.fkOrphans(spark, dir)) === Seq.empty)
+  }
+}
+
+/** Descriptions of the Spark jobs one block launches on the calling
+  * thread, in start order. Jobs are tagged with a per-call local
+  * property, so jobs of other threads are not counted; a marker job's
+  * end (the bus delivers in order) tells that every earlier event was
+  * delivered, as in StreamingSpec's state-store task counter.
+  */
+private class JobCounter(spark: org.apache.spark.sql.SparkSession) {
+  import org.apache.spark.scheduler._
+  import scala.jdk.CollectionConverters._
+  private val sc = spark.sparkContext
+  private val TagKey = "graft.spec.jobCounter"
+
+  def jobsDuring(f: => Any): Seq[String] = jobsAndValue(f)._1
+
+  def jobsAndValue[A](f: => A): (Seq[String], A) = {
+    val tag = java.util.UUID.randomUUID.toString
+    val marker = tag + ":marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val t = p.getProperty(TagKey)
+          if (t == tag) seen.add(Option(p.getProperty("spark.job.description")).getOrElse(""))
+          else if (t == marker) markerJob = e.jobId
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    val prior = sc.getLocalProperty(TagKey)
+    try {
+      sc.setLocalProperty(TagKey, tag)
+      val value = f
+      sc.setLocalProperty(TagKey, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (seen.iterator().asScala.toList, value)
+    } finally {
+      sc.setLocalProperty(TagKey, prior)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -2,7 +2,7 @@
 """Per-micro-batch cost breakdown of a Spark event log.
 
 Usage: python3 tools/stage_breakdown.py EVENT_LOG [--where KEY=VALUE ...]
-                                        [--totals]
+                                        [--totals | --by-callsite]
 
 EVENT_LOG is an uncompressed Spark event log (one JSON event per line),
 as written by a JVM started with
@@ -31,6 +31,12 @@ carry `sql.streaming.queryId` and `streaming.sql.batchId`; anything else
 followed by per-query totals and the grand total. `--where` keeps only
 jobs whose local property KEY equals VALUE (repeatable), e.g.
 `--where perfbench.phase=timed`; `--totals` prints the totals only.
+
+`--by-callsite` is for batch logs: it prints instead, per call site, the
+jobs started there and their job-seconds (submission to completion),
+slowest first. A job's call site is the name of its first stage, which
+Spark sets to the user-code line that launched it (e.g.
+`parquet at Tables.scala:20`).
 """
 import argparse
 import json
@@ -81,6 +87,26 @@ def breakdown(lines, where):
     return rows
 
 
+def by_callsite(lines, where):
+    started = {}       # job id -> (call site, submission time in ms)
+    rows = defaultdict(lambda: {"jobs": 0, "job_s": 0.0})
+    for line in lines:
+        e = json.loads(line)
+        kind = e.get("Event")
+        if kind == "SparkListenerJobStart":
+            props = e.get("Properties") or {}
+            if any(props.get(k) != v for k, v in where):
+                continue
+            stages = e.get("Stage Infos") or []
+            site = stages[0]["Stage Name"] if stages else "-"
+            started[e["Job ID"]] = (site, e.get("Submission Time", 0))
+            rows[site]["jobs"] += 1
+        elif kind == "SparkListenerJobEnd" and e["Job ID"] in started:
+            site, t0 = started.pop(e["Job ID"])
+            rows[site]["job_s"] += (e.get("Completion Time", t0) - t0) / 1e3
+    return rows
+
+
 def event_lines(path):
     if not os.path.isdir(path):
         with open(path) as f:
@@ -108,8 +134,17 @@ def main():
     p.add_argument("log")
     p.add_argument("--where", action="append", default=[], metavar="KEY=VALUE")
     p.add_argument("--totals", action="store_true")
+    p.add_argument("--by-callsite", action="store_true")
     args = p.parse_args()
     where = [w.split("=", 1) for w in args.where]
+    if args.by_callsite:
+        sites = by_callsite(event_lines(args.log), where)
+        print("%5s %8s  %s" % ("jobs", "job_s", "callsite"))
+        for site in sorted(sites, key=lambda k: (-sites[k]["job_s"], k)):
+            print("%5d %8.2f  %s" % (sites[site]["jobs"], sites[site]["job_s"], site))
+        print("%5d %8.2f  %s" % (sum(r["jobs"] for r in sites.values()),
+                                 sum(r["job_s"] for r in sites.values()), "total"))
+        return
     rows = breakdown(event_lines(args.log), where)
 
     print("%-36s %6s %5s %6s %6s %8s %11s %12s" % (("query", "batch") + COLS))
