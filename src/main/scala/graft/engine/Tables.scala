@@ -83,12 +83,21 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
-  private def inferSchema(spark: SparkSession, path: String): StructType = {
+  private def inferSchema(spark: SparkSession, path: String): StructType =
+    describe(spark, s"graft.schema $path")(spark.read.parquet(path).schema)
+
+  /** Run `body` with `label` as the `spark.job.description` of every
+    * Spark job it launches from this thread (AQE's stage jobs inherit
+    * it too), then restore the thread's prior description. Event logs
+    * and listeners show the label instead of a call site, so a
+    * construction job can be told from the query's own jobs.
+    */
+  private[graft] def describe[T](spark: SparkSession, label: String)(body: => T): T = {
     val sc = spark.sparkContext
     val descKey = "spark.job.description"
     val prior = sc.getLocalProperty(descKey)
-    sc.setJobDescription(s"graft.schema $path")
-    try spark.read.parquet(path).schema
+    sc.setJobDescription(label)
+    try body
     finally sc.setLocalProperty(descKey, prior)
   }
 

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -1426,76 +1427,146 @@ object Similarity {
   }
 
   /** Power-iteration rounds and the fixed-point scale of the iterated
-    * direction vector. The scale bounds the accumulators: with codes
-    * centered into [−255, 255] and |v| ≤ [[PowerScale]], per-row
-    * projections stay ≤ 64·255·10³ ≈ 1.6e7 and the per-dim aggregate
-    * ≤ N·4.2e9 — inside BIGINT up to N ≈ 2·10⁹ vectors; beyond that,
-    * pre-scale the projections down one decade. */
+    * direction vector. The scale bounds the exact integers: with codes
+    * centered into [−255, 255] and |v| ≤ [[PowerScale]], a vector's
+    * projection stays ≤ 64·255·10³ ≈ 1.6e7 and each component of
+    * u = C·v ≤ N·4.2e9. u must fit BIGINT, as the DuckDB oracle's
+    * per-dim sums do, which holds up to N ≈ 2·10⁹ vectors; past that
+    * the power round fails instead of wrapping. The Gram entries
+    * themselves (≤ N·255²) fit up to N ≈ 1.4·10¹⁴, and the
+    * renormalization |u|·scale runs in exact integers. */
   val PowerIters = 3
   val PowerScale = 1000L
 
-  /** TOP PRINCIPAL DIRECTION of the embedding distribution by
-    * MATRIX-FREE POWER ITERATION — the anisotropy probe an embedding
-    * pipeline runs before trusting cosine distances (a collapsed or
-    * rogue dominant direction makes every similarity score lie; cf.
-    * the representation-degeneration literature): iterate
-    * v ← Xᵀ(X v) over the CENTERED int8 codes without ever
-    * materializing the 64×64 covariance, renormalizing each round to
-    * fixed-point scale [[PowerScale]] by the max |component|.
+  /** TOP PRINCIPAL DIRECTION of the embedding distribution by POWER
+    * ITERATION — the anisotropy probe an embedding pipeline runs
+    * before trusting cosine distances (a collapsed or rogue dominant
+    * direction makes every similarity score lie; cf. the
+    * representation-degeneration literature): iterate v ← C·v over
+    * the covariance C of the CENTERED int8 codes, renormalizing each
+    * round to fixed-point scale [[PowerScale]] by the max |component|.
     *
     * All-integer end to end — centering by the floor per-dim mean,
-    * projections and aggregates exact BIGINT, normalization as
-    * sign(u)·((|u|·scale) div max|u|) (abs-first, so Spark's
-    * truncating div and DuckDB's floor `//` agree on negatives) — so
-    * the DuckDB oracle replays every iteration bit-for-bit.
+    * C and C·v exact, normalization as sign(u)·((|u|·scale) div
+    * max|u|) (abs-first, so truncating and floor division agree on
+    * negatives) — so the DuckDB oracle, which runs each round as
+    * v ← Xᵀ(X v) over the centered codes, matches bit-for-bit:
+    * (XᵀX)v = Xᵀ(Xv) over the integers.
     *
-    * Scale shape: each round is ONE corpus scan — a per-row fold
-    * against the driver-literal v (codegen'd, no join), then a
-    * 64-row per-dim aggregate collected driver-side (model-sized, the
-    * k-means precedent). T rounds = T scans; nothing shuffles but the
-    * 64-row aggregate. This is exactly how distributed PCA/power
-    * methods run on a 1000-executor cluster.
+    * Scale shape: ONE corpus scan ([[codeGram]]) aggregates the exact
+    * BIGINT Gram statistics Σx·xᵀ (64×64), Σx and n of the codes; the
+    * centering, the [[PowerIters]] rounds and the output are 64×64
+    * driver algebra, and the 64 rows leave as a local relation already
+    * in `dim` order (no sort, no exchange). Per vector the scan costs
+    * 64·65/2 checked multiply-adds; its result is model-sized at any N.
+    *
+    * The Gram is recomputed on every call and never memoized: it is a
+    * function of the table's current rows, not a frozen model like the
+    * [[quantStats]] bounds it codes against, so keeping it across
+    * calls would serve a result computed by an earlier query.
     */
   def principalDir(spark: SparkSession, dir: String,
       iters: Int = PowerIters): DataFrame = {
     import spark.implicits._
-    val (_, v) = centeredAndDirection(spark, dir, iters)
-    v.zipWithIndex.map { case (c, d) => (d.toLong, c) }
-      .toDF("dim", "v").orderBy($"dim")
+    val (_, _, v) = covarianceAndDirection(spark, dir, iters)
+    v.zipWithIndex.map { case (c, d) => (d.toLong, c) }.toDF("dim", "v")
   }
 
-  /** The centered-code frame `(vec_id, cvc)` (localCheckpointed) and
-    * the power-iterated direction — shared by [[principalDir]] and
-    * [[anisotropy]]. */
-  private def centeredAndDirection(spark: SparkSession, dir: String,
-      iters: Int): (DataFrame, IndexedSeq[Long]) = {
-    import spark.implicits._
-    val coded = pqCodedFrame(spark, dir)
-    // center: floor per-dim mean of the codes (non-negative sums —
-    // truncating and floor division agree)
-    val means = coded.select(posexplode($"vc").as(Seq("dim", "x")))
-      .groupBy($"dim").agg(sum($"x").as("s"), count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1) / r.getLong(2)).toMap
-    val meanArr = (0 until means.size).map(means)
-    val cv = coded
-      .select($"vec_id", expr(
-        s"zip_with(vc, array(${meanArr.mkString(", ")}), (a, b) -> a - b)").as("cvc"))
-      .localCheckpoint()
-    var v: IndexedSeq[Long] = IndexedSeq.fill(means.size)(1L)
+  /** The corpus size n, the centered covariance C and the
+    * power-iterated direction, from one [[codeGram]] pass — shared by
+    * [[principalDir]] and [[anisotropy]]. */
+  private def covarianceAndDirection(spark: SparkSession, dir: String,
+      iters: Int): (Long, IndexedSeq[IndexedSeq[BigInt]], IndexedSeq[Long]) = {
+    val (mns, mxs) = quantStats(spark, dir)
+    val (n, c) = centeredCovariance(codeGram(spark, dir, mns, mxs), mns.length)
+    var v: IndexedSeq[Long] = IndexedSeq.fill(c.length)(1L)
     for (_ <- 1 to iters) {
-      val u = cv
-        .withColumn("s", ArrayExpressions.dotL($"cvc", lit(v.toArray)))
-        .select($"s", posexplode($"cvc").as(Seq("dim", "x")))
-        .groupBy($"dim").agg(sum($"s" * $"x").as("u"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val m = u.values.map(math.abs).max
+      val u = c.map(row => row.indices.map(j => row(j) * v(j)).sum)
+      u.find(!_.isValidLong).foreach(ud =>
+        throw new ArithmeticException(s"BIGINT overflow in a power round: $ud"))
+      val m = u.map(_.abs).max
       require(m > 0, "degenerate direction: all components zero")
-      v = (0 until means.size).map { d =>
-        val ud = u(d)
-        if (ud < 0) -((-ud) * PowerScale / m) else ud * PowerScale / m
+      v = u.map(ud => (ud.abs * PowerScale / m * ud.signum).toLong)
+    }
+    (n, c, v)
+  }
+
+  /** One described corpus pass: every embedding's codes under the
+    * frozen quantizer bounds `mns`/`mxs` ([[quantStats]]), aggregated
+    * by [[GramAgg]] into its exact statistics buffer. Its jobs carry
+    * the description `graft.gram <dir>`. */
+  private def codeGram(spark: SparkSession, dir: String,
+      mns: Seq[Double], mxs: Seq[Double]): Array[Long] = {
+    import spark.implicits._
+    val gram = udaf(new GramAgg(mns.length))
+    val emb = Tables.load(spark, dir, "embeddings")
+      .select(Vectors.toDouble($"embedding").as("emb"))
+    Tables.describe(spark, s"graft.gram $dir") {
+      emb.select(gram(pqCodesCol(mns, mxs))).as[Array[Long]].collect().head
+    }
+  }
+
+  /** (n, C) from a [[GramAgg]] buffer over `d`-long vectors:
+    * μ = Σx div n (non-negative code sums, so truncating and floor
+    * division agree), then
+    * C = G − μ·Σxᵀ − Σx·μᵀ + n·μμᵀ = Σ (x − μ)(x − μ)ᵀ, exactly. */
+  private def centeredCovariance(stats: Array[Long],
+      d: Int): (Long, IndexedSeq[IndexedSeq[BigInt]]) = {
+    val n = stats(d * d + d)
+    require(n > 0, "no vectors to center")
+    val sx = (0 until d).map(i => BigInt(stats(d * d + i)))
+    val mu = sx.map(_ / n)
+    val c = (0 until d).map { i =>
+      (0 until d).map { j =>
+        val g = BigInt(stats(math.min(i, j) * d + math.max(i, j)))
+        g - mu(i) * sx(j) - sx(i) * mu(j) + mu(i) * mu(j) * n
       }
     }
-    (cv, v)
+    (n, c)
+  }
+
+  /** Exact BIGINT Gram statistics of `d`-long code vectors, for
+    * [[codeGram]]. The buffer (also the result) is
+    * `[G (d·d, row-major, upper triangle i ≤ j filled) | Σx (d) | n]`.
+    * Every sum and product is checked (`Math.addExact` /
+    * `multiplyExact`), so an overflow fails the query with an
+    * `ArithmeticException` instead of wrapping — as ANSI sums do. A
+    * null vector, a vector of another length or a null element fails
+    * loudly too; none yields a result.
+    */
+  private[graft] final class GramAgg(d: Int)
+      extends Aggregator[Array[java.lang.Long], Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](d * d + d + 1)
+
+    // boxed input: a primitive array would decode a null element as 0
+    def reduce(b: Array[Long], in: Array[java.lang.Long]): Array[Long] = {
+      require(in != null, "null code vector")
+      require(in.length == d, s"code vector of length ${in.length}, expected $d")
+      val x = in.map { e => require(e != null, "null element in a code vector"); e.longValue }
+      var i = 0
+      while (i < d) {
+        val xi = x(i)
+        var j = i
+        while (j < d) {
+          b(i * d + j) = Math.addExact(b(i * d + j), Math.multiplyExact(xi, x(j)))
+          j += 1
+        }
+        b(d * d + i) = Math.addExact(b(d * d + i), xi)
+        i += 1
+      }
+      b(d * d + d) = Math.addExact(b(d * d + d), 1L)
+      b
+    }
+
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var k = 0
+      while (k < a.length) { a(k) = Math.addExact(a(k), b(k)); k += 1 }
+      a
+    }
+
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** ANISOTROPY report — the one-row verdict on [[principalDir]]'s
@@ -1504,23 +1575,20 @@ object Similarity {
     * Σ(x·v)² / (|v|²·Σ|x|²) in ppm (≤ 10⁶ by Cauchy–Schwarz). A
     * healthy isotropic embedding sits near 1/64·10⁶ ≈ 15625; a
     * collapsed one nears 10⁶ — the "all my cosines are 0.9"
-    * pathology. Per-row products stay in BIGINT (|s| ≤ 1.6e7); the
-    * corpus sums ride DECIMAL(38,0), so no overflow at any N.
+    * pathology. Over the centered codes Σ(x·v)² = vᵀCv and
+    * Σ|x|² = trace(C), so the ratio comes from the same one-pass Gram
+    * as the direction, in exact integers on the driver (no extra
+    * corpus scan, no overflow at any N the Gram holds).
     */
   def anisotropy(spark: SparkSession, dir: String,
       iters: Int = PowerIters): DataFrame = {
     import spark.implicits._
-    val (cv, v) = centeredAndDirection(spark, dir, iters)
-    val vv = v.map(x => x * x).sum
-    cv
-      .withColumn("s", ArrayExpressions.dotL($"cvc", lit(v.toArray)))
-      .withColumn("xx", ArrayExpressions.dotL($"cvc", $"cvc"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(expr("CAST(s * s AS DECIMAL(38,0))")).as("ss"),
-        sum(expr("CAST(xx AS DECIMAL(38,0))")).as("xx"))
-      .select($"n_vecs",
-        expr(s"CAST((ss * 1000000) div (CAST($vv AS DECIMAL(38,0)) * xx) AS BIGINT)")
-          .as("explained_ppm"))
+    val (n, c, v) = covarianceAndDirection(spark, dir, iters)
+    val ss = c.indices.map(i => c(i).indices.map(j => c(i)(j) * v(j)).sum * v(i)).sum
+    val xx = c.indices.map(i => c(i)(i)).sum
+    val vv = BigInt(v.map(x => x * x).sum)
+    // Option keeps explained_ppm nullable, as the SQL division made it
+    Seq((n, Option((ss * 1000000 / (vv * xx)).toLong))).toDF("n_vecs", "explained_ppm")
   }
 
   /** Embedding-space OUTLIERS per class — the "these examples don't

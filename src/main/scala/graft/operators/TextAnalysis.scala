@@ -710,12 +710,13 @@ object TextAnalysis {
     * sized, not corpus-sized — the one aggregate over the corpus is
     * the word count); each round is one pair-count aggregate plus a
     * driver-side top-1 pick (3 collects of one row, the PQ-trainer
-    * pattern), and the re-representation is a map-side fold.
+    * pattern), and the re-representation is a map-side fold. The
+    * merge table leaves as a local relation already in `iter` order,
+    * so the returned plan has no sort and no exchange.
     */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     trainBpeMerges(spark, dir).toDF("iter", "sym_a", "sym_b", "n_pair")
-      .orderBy($"iter")
   }
 
   /** The greedy left-to-right merge fold: rebuild the `$S`-joined

@@ -1087,14 +1087,10 @@ class ExtensionSpec extends SparkSpec {
     assert(rows.exists(!_.getBoolean(11)))
   }
 
-  test("principal direction equals a driver-side power iteration on the same codes") {
+  /** The centered codes and the power-iterated direction, recomputed
+    * exactly on the driver from the raw embeddings. */
+  private lazy val driverPower: (Array[Array[Long]], Array[Long]) = {
     import spark.implicits._
-    val got = Similarity.principalDir(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.map(_._1).toSeq === (0L until 64L))
-    // the renormalization pins the max |component| to the scale
-    assert(got.map(t => math.abs(t._2)).max === Similarity.PowerScale)
-    // exact driver recompute from the quantized codes
     val e = graft.engine.Tables.load(spark, dir, "embeddings")
       .select($"vec_id", graft.functions.Vectors.toDouble($"embedding").as("emb"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
@@ -1118,18 +1114,75 @@ class ExtensionSpec extends SparkSpec {
       v = u.map(ud =>
         if (ud < 0) -((-ud) * Similarity.PowerScale / m) else ud * Similarity.PowerScale / m)
     }
-    assert(got.map(_._2).toSeq === v.toSeq)
+    (cvc, v)
+  }
+
+  test("principal direction equals a driver-side power iteration on the same codes") {
+    val got = Similarity.principalDir(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.map(_._1).toSeq === (0L until 64L))
+    // the renormalization pins the max |component| to the scale
+    assert(got.map(t => math.abs(t._2)).max === Similarity.PowerScale)
+    assert(got.map(_._2).toSeq === driverPower._2.toSeq)
+  }
+
+  test("principal direction is one described Gram pass and a local relation") {
+    Similarity.principalDir(spark, dir) // warms the quantizer bounds and schema
+    val counter = new JobCounter(spark)
+    val (built, df) = counter.jobsAndValue(Similarity.principalDir(spark, dir))
+    val collected = counter.jobsDuring(df.collect())
+    assert(built.nonEmpty && built.forall(_ == s"graft.gram $dir"),
+      s"construction jobs: $built")
+    assert(built.length + collected.length <= 3, s"jobs: $built then $collected")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
   }
 
   test("anisotropy ratio is a valid Rayleigh fraction and beats the isotropic floor") {
     val r = Similarity.anisotropy(spark, dir).collect()
     assert(r.length === 1)
+    val (cvc, v) = driverPower
+    val ss = cvc.map(row => BigInt(row.indices.map(d => row(d) * v(d)).sum).pow(2)).sum
+    val xx = cvc.map(row => BigInt(row.map(x => x * x).sum)).sum
+    val vv = BigInt(v.map(x => x * x).sum)
+    assert(r(0).getLong(0) === cvc.length.toLong)
     val ppm = r(0).getLong(1)
+    assert(ppm === (ss * 1000000 / (vv * xx)).toLong)
     // Cauchy–Schwarz upper bound, and the TOP direction can't capture
     // less than the 1/64 an average direction would
     assert(ppm > 1000000L / 64 && ppm <= 1000000L,
       s"explained_ppm $ppm outside (15625, 1e6]")
-    assert(r(0).getLong(0) > 0)
+  }
+
+  test("Gram accumulator sums exactly and fails loudly on overflow or a malformed vector") {
+    import org.apache.spark.sql.functions.{col, udaf}
+    val agg = new Similarity.GramAgg(2)
+    def row(xs: java.lang.Long*): Array[java.lang.Long] = xs.toArray
+    def fold(rows: Array[java.lang.Long]*): Array[Long] = rows.foldLeft(agg.zero)(agg.reduce)
+    // [G00 G01 G10 G11 | Σx0 Σx1 | n], lower triangle left at zero
+    assert(fold(row(1L, 2L), row(3L, 4L)).toSeq === Seq(10L, 14L, 0L, 20L, 4L, 6L, 2L))
+    assert(agg.merge(fold(row(1L, 2L)), fold(row(3L, 4L))).toSeq ===
+      fold(row(1L, 2L), row(3L, 4L)).toSeq)
+    // 3037000499² fits BIGINT, twice it does not
+    val big = row(3037000499L, 0L)
+    intercept[ArithmeticException](fold(big, big))
+    intercept[ArithmeticException](agg.merge(fold(big), fold(big)))
+    intercept[ArithmeticException](fold(row(Long.MaxValue, 2L)))
+    intercept[IllegalArgumentException](fold(row(1L, 2L, 3L)))
+    intercept[IllegalArgumentException](fold(row(1L, null)))
+    intercept[IllegalArgumentException](agg.reduce(agg.zero, null))
+    // the same inputs through Spark fail the query, not the result
+    val gram = udaf(new Similarity.GramAgg(2))
+    def run(rows: String*): Throwable = intercept[Exception](
+      spark.sql(rows.map(r => s"SELECT $r AS x").mkString(" UNION ALL "))
+        .select(gram(col("x"))).collect())
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def failsWith[E <: Throwable](t: Throwable)(implicit ct: scala.reflect.ClassTag[E]) =
+      assert(causes(t).exists(ct.runtimeClass.isInstance), t)
+    failsWith[ArithmeticException](run("array(3037000499L, 0L)", "array(3037000499L, 1L)"))
+    failsWith[IllegalArgumentException](run("array(1L, 2L, 3L)"))
+    failsWith[IllegalArgumentException](run("array(1L, CAST(NULL AS BIGINT))"))
   }
 
   test("residual ivfpq refines by the exact fixed-point L2 the driver can recompute") {
@@ -1200,6 +1253,14 @@ class ExtensionSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(got.toSeq === Seq(
       (1L, "a", "a", 18L), (2L, "a", "b", 11L), (3L, "aa", "ab", 9L)))
+  }
+
+  test("bpe training returns its merge table in iter order with no exchange") {
+    val df = graft.operators.TextAnalysis.bpeTrain(spark, dir)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(df.collect().map(_.getLong(0)).toSeq ===
+      (1L to graft.operators.TextAnalysis.BpeMerges.toLong))
   }
 
   test("bpe training on the corpus equals a driver reimplementation of 3 merge rounds") {

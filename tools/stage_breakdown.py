@@ -34,9 +34,18 @@ jobs whose local property KEY equals VALUE (repeatable), e.g.
 
 `--by-callsite` is for batch logs: it prints instead, per call site, the
 jobs started there and their job-seconds (submission to completion),
-slowest first. A job's call site is the name of its first stage, which
-Spark sets to the user-code line that launched it (e.g.
-`parquet at Tables.scala:20`).
+slowest first. A job's call site is, in order of preference:
+
+  1. its `spark.job.description`, when the code set one (e.g.
+     `graft.schema <path>`, `graft.gram <dir>`);
+  2. the description of the SQL execution it ran for (its
+     `spark.sql.execution.id`), which Spark sets to the user-code line
+     of the action (e.g. `collect at Similarity.scala:869`). Jobs that
+     adaptive query execution submits from its own threads get their
+     stage names from those threads, so this is the only place their
+     user call site survives;
+  3. the name of its first stage, which Spark sets to the line that
+     launched it (e.g. `parquet at Tables.scala:20`).
 """
 import argparse
 import json
@@ -87,18 +96,26 @@ def breakdown(lines, where):
     return rows
 
 
+SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+
+
 def by_callsite(lines, where):
     started = {}       # job id -> (call site, submission time in ms)
+    executions = {}    # SQL execution id -> its description
     rows = defaultdict(lambda: {"jobs": 0, "job_s": 0.0})
     for line in lines:
         e = json.loads(line)
         kind = e.get("Event")
-        if kind == "SparkListenerJobStart":
+        if kind == SQL_START:
+            executions[str(e["executionId"])] = e.get("description")
+        elif kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             if any(props.get(k) != v for k, v in where):
                 continue
             stages = e.get("Stage Infos") or []
-            site = stages[0]["Stage Name"] if stages else "-"
+            site = (props.get("spark.job.description")
+                    or executions.get(props.get("spark.sql.execution.id"))
+                    or (stages[0]["Stage Name"] if stages else "-"))
             started[e["Job ID"]] = (site, e.get("Submission Time", 0))
             rows[site]["jobs"] += 1
         elif kind == "SparkListenerJobEnd" and e["Job ID"] in started:
