@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -411,6 +412,31 @@ object Tables {
     *    are registered ([[graft.plans.GraftExtensions.register]]). The
     *    guard stays off until a caller sets
     *    `spark.graft.failOnGlobalWindow=true` (Bench, Verify, ScaleBench).
+    *
+    * Four settings keep generated code and local files from taxing every
+    * micro-batch, dashboard call and query:
+    *  - Artifact isolation is off (`spark.sql.artifact.isolation.enabled`).
+    *    Spark keys its codegen cache by (context class loader, source),
+    *    and isolation gives every session, each stream's clone included,
+    *    its own executor class loader, so every session recompiled the
+    *    same sources. graft adds no artifacts or jars to a session
+    *    (TablesSpec scans `src/main` for the calls).
+    *  - The codegen cache holds 1000 classes
+    *    (`spark.sql.codegen.cache.maxEntries`, default 100): a
+    *    `vote_stream` run compiles about 240 distinct sources, which a
+    *    100-entry cache evicts and recompiles.
+    *  - `file:` paths use [[NioLocalFileSystem]] (`fs.file.impl`; else
+    *    Hive's `ProxyLocalFileSystem` wins by jar order). Without the
+    *    native Hadoop library, Hadoop's local file system forks `chmod`
+    *    per created file, `.crc` and directory.
+    *  - Checkpoints use the `FileSystem`-based manager
+    *    (`spark.sql.streaming.checkpointFileManagerClass`); the default
+    *    `FileContext` manager forks `readlink` twice per rename. On
+    *    `file:` both are check-then-rename, so the guarantee is the same,
+    *    and checkpoint checksums stay on. All graft checkpoints are
+    *    local: a checkpoint on a non-`file:` store (HDFS, an object
+    *    store) would want the `FileContext` manager back, for its atomic
+    *    no-overwrite rename.
     */
   def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
       : SparkSession = {
@@ -421,6 +447,11 @@ object Tables {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
       .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",
       Sizing.shufflePartitions(0, spark.sparkContext.defaultParallelism).toString)

@@ -891,6 +891,64 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).as[(Int, Int)].collect().toSeq.sorted === batch(11))
   }
 
+  test("a foreachBatchUpsert data batch forks no process from Hadoop's file system") {
+    import java.nio.file.Paths
+    import java.nio.file.attribute.PosixFilePermissions
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def msg(i: Int, hour: Int) = voteJson(s"t$i", s"v$i", s"c${i % 3}", s"Cand ${i % 3}",
+      s"P${i % 3}", f"2024-05-01 $hour%02d:${i % 60}%02d:00")
+    val out = Files.createTempDirectory("graft-upsert-forks").toString + "/rollup"
+    val checkpoint = ckpt()
+    val stream = MemoryStream[String]
+    val agg = EventStreams.votesPerCandidate(EventStreams.parseVotes(stream.toDF()))
+      .withColumn("rollup_key", concat_ws("|", col("window_start"), col("candidate_id")))
+    val q = EventStreams.foreachBatchUpsert(agg, out,
+      key = "rollup_key", versionCol = "vote_count", checkpointDir = checkpoint)
+    val recording = new Recording()
+    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      stream.addData((0 until 20).map(msg(_, 10)))
+      q.processAllAvailable()
+      // the second data batch reads, merges and swaps the table and
+      // commits state, offsets and commits to the checkpoint
+      recording.enable("jdk.ProcessStart").withStackTrace()
+      recording.start()
+      stream.addData((20 until 30).map(msg(_, 12)))
+      q.processAllAvailable()
+      recording.stop()
+      recording.dump(jfr)
+    } finally {
+      recording.close()
+      q.stop()
+    }
+    val forks = RecordingFile.readAllEvents(jfr).asScala.filter { e =>
+      Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+        _.getMethod.getType.getName.startsWith("org.apache.hadoop.fs.")))
+    }.map(_.getString("command"))
+    assert(forks.isEmpty, s"${forks.size} forks: ${forks.take(5).mkString("; ")}")
+    // the same files, modes and checksum sidecars as Hadoop's own
+    // local file system writes
+    def mode(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val table = Paths.get(out)
+    assert(mode(table) === "rwxr-xr-x")
+    val parts = Files.list(table).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    parts.foreach { f =>
+      assert(mode(f) === "rw-r--r--", f)
+      assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f)
+    }
+    Seq("offsets", "commits").foreach { log =>
+      val last = Paths.get(checkpoint, log, "1")
+      assert(mode(last) === "rw-r--r--", last)
+      assert(Files.exists(last.resolveSibling(".1.crc")), last)
+    }
+    assert(spark.read.parquet(out).count() === 6L)
+  }
+
   test("flatMapGroupsWithState sessionizer emits each closed session exactly once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

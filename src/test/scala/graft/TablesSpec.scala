@@ -1,13 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.Tables
+import graft.engine.{NioLocalFileSystem, Tables}
 
 /** Fixture-schema-drift regression (r8 verdict item #2): the driver has
   * shipped `events.ts` as int64 TIMESTAMP(NANOS) (rounds 1–8) and as
@@ -18,6 +23,8 @@ import graft.engine.Tables
   * Also pins the schema memo of `Tables.parquet`: a warm load launches
   * no Spark job, and a rewritten file is read with its new schema; and
   * that `dropOrphanRdds` leaves no dropped broadcast to the cleaner.
+  * And pins the session profile: its settings, one builder, and
+  * generated code shared with a stream's cloned session.
   */
 class TablesSpec extends SparkSpec {
 
@@ -95,20 +102,61 @@ class TablesSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism)
     assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt ===
       Int.MaxValue)
+    // generated code is shared by every session; local files and
+    // checkpoints are written without forking a process
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt === 1000)
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ===
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    val local = FileSystem.get(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(local.getClass === classOf[NioLocalFileSystem])
+    // ... which sets each mode bit as chmod would
+    val file = Files.createTempFile("graft-mode", "")
+    Seq("rw-r-----" -> "640", "r-x---rwx" -> "507", "-w--wx--x" -> "231").foreach {
+      case (symbolic, octal) =>
+        local.setPermission(new Path(file.toUri),
+          new FsPermission(Integer.parseInt(octal, 8).toShort))
+        assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(file)) === symbolic)
+    }
+  }
+
+  test("a session cloned like a stream's reuses the root session's generated code") {
+    def run(s: SparkSession) = s.range(0, 1000, 1, 4)
+      .selectExpr("id % 7 AS k", "id * 3 AS v")
+      .groupBy("k").agg(sum("v").as("s"), max("v").as("m"))
+      .orderBy("k").collect().toSeq
+    val expected = run(spark)
+    // a stream runs on a clone of its session: a new session with the
+    // root session's runtime conf
+    val clone = spark.newSession()
+    spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
+      .foreach { case (k, v) => clone.conf.set(k, v) }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    assert(run(clone) === expected)
+    assert(compiles.getCount - before === 0L, "classes compiled again for the clone")
   }
 
   test("only Tables.scala builds a session or reads the core-count variable") {
     import scala.jdk.CollectionConverters._
     // split so this file does not match its own needles
     val needles = Seq("SparkSession" + ".builder", "SPARK_GRAFT" + "_CPUS")
-    val roots = Seq("src/main", "src/test").map(java.nio.file.Paths.get(_))
-    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from the test cwd"))
-    val hits = roots.flatMap { r =>
+    def files(root: String) = {
+      val r = java.nio.file.Paths.get(root)
+      assert(Files.isDirectory(r), s"$r not found from the test cwd")
       val walk = Files.walk(r)
       try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
       finally walk.close()
-    }.filter(f => needles.exists(Files.readString(f).contains)).map(_.toString).sorted
+    }
+    val hits = (files("src/main") ++ files("src/test"))
+      .filter(f => needles.exists(Files.readString(f).contains)).map(_.toString).sorted
     assert(hits === Seq("src/main/scala/graft/engine/Tables.scala"))
+    // the session profile turns artifact isolation off: no session may
+    // carry artifacts of its own
+    val artifactCalls = Seq("add" + "Artifact", "add" + "Jar")
+    val adders = files("src/main")
+      .filter(f => artifactCalls.exists(Files.readString(f).contains)).map(_.toString)
+    assert(adders.isEmpty)
   }
 
   /** A one-file parquet directory written by Spark at `path`, its

@@ -22,6 +22,9 @@ carry `sql.streaming.queryId` and `streaming.sql.batchId`; anything else
   stages        stages that ran (skipped stages are not counted)
   tasks         tasks that ended
   task_s        summed executor run time of those tasks, seconds
+  task_cpu_s    summed executor CPU time of those tasks, seconds; the gap
+                to task_s is time the tasks spent waiting (I/O, locks,
+                forked processes, compilation on another thread)
   state_tasks   tasks that opened a state store (the stateful operator's
                 "number of state store instances" metric); a stage that
                 only reads a cached batch lists the StateStoreRDD among
@@ -55,7 +58,7 @@ from collections import defaultdict
 QUERY = "sql.streaming.queryId"
 BATCH = "streaming.sql.batchId"
 STATE_STORES = "number of state store instances"
-COLS = ("jobs", "stages", "tasks", "task_s", "state_tasks", "listing_jobs")
+COLS = ("jobs", "stages", "tasks", "task_s", "task_cpu_s", "state_tasks", "listing_jobs")
 
 
 def breakdown(lines, where):
@@ -89,7 +92,9 @@ def breakdown(lines, where):
             if key is not None:
                 row = rows[key]
                 row["tasks"] += 1
-                row["task_s"] += (e.get("Task Metrics") or {}).get("Executor Run Time", 0) / 1e3
+                metrics = e.get("Task Metrics") or {}
+                row["task_s"] += metrics.get("Executor Run Time", 0) / 1e3
+                row["task_cpu_s"] += metrics.get("Executor CPU Time", 0) / 1e9
                 accs = (e.get("Task Info") or {}).get("Accumulables", [])
                 if any(a.get("Name") == STATE_STORES for a in accs):
                     row["state_tasks"] += 1
@@ -141,9 +146,9 @@ def batch_order(key):
 
 
 def fmt(label, batch, row):
-    return "%-36s %6s %5d %6d %6d %8.2f %11d %12d" % (
+    return "%-36s %6s %5d %6d %6d %8.2f %10.2f %11d %12d" % (
         label, batch, row["jobs"], row["stages"], row["tasks"], row["task_s"],
-        row["state_tasks"], row["listing_jobs"])
+        row["task_cpu_s"], row["state_tasks"], row["listing_jobs"])
 
 
 def main():
@@ -164,7 +169,7 @@ def main():
         return
     rows = breakdown(event_lines(args.log), where)
 
-    print("%-36s %6s %5s %6s %6s %8s %11s %12s" % (("query", "batch") + COLS))
+    print("%-36s %6s %5s %6s %6s %8s %10s %11s %12s" % (("query", "batch") + COLS))
     per_query = defaultdict(lambda: dict.fromkeys(COLS, 0))
     batches = defaultdict(int)
     for key in sorted(rows, key=batch_order):
