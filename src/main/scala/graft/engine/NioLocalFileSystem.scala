@@ -1,7 +1,9 @@
 package graft.engine
 
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermissions
+import java.nio.file.attribute.PosixFilePermission
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -25,6 +27,16 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     if (permission.getStickyBit) super.setPermission(p, permission)
     else
       try Files.setPosixFilePermissions(pathToFile(p).toPath,
-        PosixFilePermissions.fromString(permission.toString))
+        NioRawLocalFileSystem.posix(permission.toShort))
       catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+}
+
+object NioRawLocalFileSystem {
+  // PosixFilePermission lists OWNER_READ ... OTHERS_EXECUTE, mode bits 8 down to 0
+  private val bits = PosixFilePermission.values.toSeq.zipWithIndex
+    .map { case (perm, i) => perm -> (1 << (8 - i)) }
+
+  /** The permissions set in the low nine bits of `mode`. */
+  def posix(mode: Short): java.util.Set[PosixFilePermission] =
+    bits.collect { case (perm, bit) if (mode & bit) != 0 => perm }.toSet.asJava
 }

@@ -5,7 +5,7 @@ import java.nio.file.attribute.PosixFilePermissions
 import java.time.LocalDateTime
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
@@ -118,6 +118,11 @@ class TablesSpec extends SparkSpec {
           new FsPermission(Integer.parseInt(octal, 8).toShort))
         assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(file)) === symbolic)
     }
+    // a create mode prints both of its modes; the masked one is set
+    local.setPermission(new Path(file.toUri), FsCreateModes.create(
+      new FsPermission(Integer.parseInt("640", 8).toShort),
+      new FsPermission(Integer.parseInt("666", 8).toShort)))
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(file)) === "rw-r-----")
   }
 
   test("a session cloned like a stream's reuses the root session's generated code") {
@@ -131,6 +136,8 @@ class TablesSpec extends SparkSpec {
     val clone = spark.newSession()
     spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
       .foreach { case (k, v) => clone.conf.set(k, v) }
+    // the compile counter is JVM-wide: a running stream would compile too
+    assert(spark.streams.active.isEmpty, "a stream is still running")
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val before = compiles.getCount
     assert(run(clone) === expected)
