@@ -437,6 +437,17 @@ object Tables {
     *    local: a checkpoint on a non-`file:` store (HDFS, an object
     *    store) would want the `FileContext` manager back, for its atomic
     *    no-overwrite rename.
+    *
+    * Memory pages are 1 MB (`spark.buffer.pageSize`). Spark otherwise
+    * sizes a page from heap ÷ cores ÷ 16, which is 16 MB at `-Xmx2g`,
+    * `local[4]`, and a broadcast join's hashed relation takes at least
+    * one whole page however few rows it holds. The turnout stream's
+    * 5,000-voter side is rebuilt every batch, and a stopped query's last
+    * plan still references its broadcast, so one 16 MB `long[]` page per
+    * stream stayed in the driver's block store after the stream ended.
+    * Larger records still get a page of their own size. A task holds at
+    * most 8,192 pages, so this caps one task's execution memory at 8 GB:
+    * a heap above about 13 GB per core would want larger pages.
     */
   def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
       : SparkSession = {
@@ -449,6 +460,7 @@ object Tables {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.buffer.pageSize", "1m")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[FileSystemBasedCheckpointFileManager].getName)

@@ -1,8 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The three reference tables, as DataFrames (schemas per FIXTURES.md §A;
   * DDL `src/setup_database.py:52-117`).
@@ -78,42 +81,70 @@ object VotingQueries {
   /** Q2 leaderboard served from the streaming-maintained per-(hour,
     * candidate) rollup — `EventStreams.votesPerCandidate` output kept
     * fresh by `foreachBatchUpsert` — instead of raw votes. This is the
-    * SURVEY §7.5-3 rollup-mode dashboard path for 100 TB: every window
-    * function and percentage here runs over hours × candidates
-    * aggregate rows, so refresh cost is independent of vote volume.
-    * Reproduces Q2's quirks exactly (single-row change CTE, COALESCE
-    * to 0, ROW_NUMBER rank) — spec-checked equal to
-    * [[votesByCandidate]] over the same votes. Precondition: every
-    * candidate_id in the stream exists in the candidate dimension (the
-    * reference's FK, `setup_database.py:96-106`, guarantees this); a
-    * violating id would surface here (the denormalized message carries
-    * its name) but be silently dropped by the dim join in
-    * [[votesByCandidate]].
+    * SURVEY §7.5-3 rollup-mode dashboard path for 100 TB: the read
+    * costs the rollup's hours × candidates cells (about 26k a year),
+    * independent of vote volume.
+    *
+    * EAGER: the call itself runs one Spark job, a one-task scan of the
+    * rollup (`coalesce(1)`), and collects its cells. The per-candidate
+    * algebra (totals, the change into the latest hour, the rank) runs on
+    * the driver, and the result is a local relation in rank order, so
+    * acting on it launches no further job. `percentage` is the same
+    * Spark expression as in [[votesByCandidate]], evaluated over that
+    * relation, so it is bit-identical. There is no window at all, so the
+    * read passes `spark.graft.failOnGlobalWindow=true`.
+    *
+    * Reproduces Q2's quirks (single-row change CTE, COALESCE to 0,
+    * ROW_NUMBER rank) — spec-checked equal to [[votesByCandidate]] over
+    * the same votes — and pins the two ties the reference leaves open:
+    *  - when several candidates have a cell in the latest hour, the
+    *    change goes to the smallest `candidate_id` among them;
+    *  - candidates with equal totals rank by `candidate_id` ascending.
+    *
+    * Precondition: every candidate_id in the stream exists in the
+    * candidate dimension (the reference's FK, `setup_database.py:96-106`,
+    * guarantees this); a violating id would surface here (the
+    * denormalized message carries its name) but be silently dropped by
+    * the dim join in [[votesByCandidate]].
     */
   def leaderboardFromRollup(rollup: DataFrame): DataFrame = {
     val spark = rollup.sparkSession
     import spark.implicits._
-    val perHour = rollup.select($"candidate_id", $"candidate_name", $"party",
-      $"window_start".as("hour"), $"vote_count".as("hourly_count"))
-    val changes = perHour
-      .select($"candidate_id", $"hour",
-        ($"hourly_count" - lag($"hourly_count", 1)
-          .over(Window.partitionBy($"candidate_id").orderBy($"hour"))).as("hourly_change"))
-      .orderBy($"hour".desc)
-      .limit(1)
-      .select($"candidate_id", $"hourly_change")
-    val totals = perHour.groupBy($"candidate_id", $"candidate_name", $"party")
-      .agg(sum($"hourly_count").as("vote_count"))
-    val total = totals.agg(sum($"vote_count").as("__total"))
-    totals
-      .join(broadcast(changes), Seq("candidate_id"), "left")
-      .crossJoin(broadcast(total))
+    val cells = rollup.coalesce(1)
+      .select($"candidate_id", $"candidate_name", $"party",
+        unix_micros($"window_start"), $"vote_count")
+      .collect()
+      .map(r => RollupCell(Option(r.getString(0)), Option(r.getString(1)),
+        Option(r.getString(2)), r.getLong(3), r.getLong(4)))
+    // the change CTE: the latest hour's cell (smallest candidate_id on a
+    // tie) minus that candidate's previous cell, 0 without one
+    val change = cells.maxByOption(_.hour).map { latest =>
+      val c = cells.filter(_.hour == latest.hour).minBy(_.candidateId)
+      val prev = cells.filter(p => p.candidateId == c.candidateId && p.hour < c.hour)
+      c.candidateId -> prev.maxByOption(_.hour).fold(0L)(c.count - _.count)
+    }
+    val totals = cells.groupMapReduce(c => (c.candidateId, c.name, c.party))(_.count)(_ + _)
+      .toSeq.sortBy { case (key, votes) => (-votes, key) }
+    val total = totals.map(_._2).sum
+    val rows = totals.zipWithIndex.map { case (((id, name, party), votes), i) =>
+      Row(name.orNull, party.orNull, votes, i + 1,
+        change.collect { case (`id`, delta) => delta }.getOrElse(0L))
+    }
+    spark.createDataFrame(rows.asJava, LeaderboardSchema)
       .select($"candidate_name", $"party", $"vote_count",
-        round($"vote_count" * lit(100.0) / $"__total", 2).as("percentage"),
-        row_number().over(Window.orderBy($"vote_count".desc)).as("rank"),
-        coalesce($"hourly_change", lit(0L)).as("hourly_change"))
-      .orderBy($"vote_count".desc)
+        round($"vote_count" * lit(100.0) / lit(total), 2).as("percentage"),
+        $"rank", $"hourly_change")
   }
+
+  private final case class RollupCell(candidateId: Option[String], name: Option[String],
+      party: Option[String], hour: Long, count: Long)
+
+  private val LeaderboardSchema = StructType(Seq(
+    StructField("candidate_name", StringType),
+    StructField("party", StringType),
+    StructField("vote_count", LongType),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("hourly_change", LongType, nullable = false)))
 
   /** Q3 `get_historical_trends` (`app.py:126-151`): running per-candidate
     * count, re-grouped per minute with MAX.

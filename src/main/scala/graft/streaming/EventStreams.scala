@@ -2772,6 +2772,9 @@ object EventStreams {
     * Each micro-batch is materialized once: the batch frame re-runs its
     * whole stateful plan on every action, so the emptiness check and
     * the merge write would otherwise each execute the state-store stage.
+    * A data batch runs two jobs, the emptiness count and the merge
+    * write: the stored table is read with the batch's schema, not
+    * inferred.
     *
     * Reader contract: a concurrent `spark.read.parquet(path)` either
     * returns a complete committed table (some batch's merge result,
@@ -2815,8 +2818,11 @@ object EventStreams {
             if (fs.exists(dst)) Some(dst)
             else if (fs.exists(prev)) Some(prev)
             else None
+          // the table is only ever written from this query's batches,
+          // and the file source makes a read schema nullable, so the
+          // batch's schema is the table's; inferring it costs a job
           val existing = source match {
-            case Some(p) => spark.read.parquet(p.toString)
+            case Some(p) => spark.read.schema(batch.schema).parquet(p.toString)
             case None => spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
           }

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryProgress}
 
 import graft.streaming.EventStreams
 
@@ -712,6 +712,62 @@ class StreamingSpec extends SparkSpec {
     assert(served.map(_(2).asInstanceOf[Long]).sum === 30L)
   }
 
+  /** A rollup table of (candidate, hour, count) cells in the shape
+    * `foreachBatchUpsert` keeps, read back with its declared schema. */
+  private def rollupTable(cells: Seq[(String, Int, Long)]): DataFrame = {
+    import spark.implicits._
+    def hour(h: Int) = Timestamp.valueOf(f"2024-05-01 $h%02d:00:00")
+    val df = cells.map { case (cand, h, n) => (hour(h), hour(h + 1), cand, s"Cand $cand", s"P$cand", n) }
+      .toDF("window_start", "window_end", "candidate_id", "candidate_name", "party", "vote_count")
+    val out = Files.createTempDirectory("graft-rollup-cells").toString + "/rollup"
+    df.write.parquet(out)
+    spark.read.schema(df.schema).parquet(out)
+  }
+
+  private val servedCells = Seq(("c0", 10, 4L), ("c1", 10, 6L), ("c2", 10, 2L), ("c0", 11, 3L))
+
+  private def served(rollup: DataFrame): Seq[Seq[Any]] =
+    graft.engine.VotingQueries.leaderboardFromRollup(rollup).collect().toSeq.map(_.toSeq)
+
+  test("a rollup leaderboard read runs one Spark job") {
+    val rollup = rollupTable(servedCells)
+    val (jobs, rows) = new JobCounter(spark).jobsAndValue(served(rollup))
+    assert(jobs.size === 1, jobs)
+    assert(rows === Seq(
+      Seq("Cand c0", "Pc0", 7L, 46.67, 1, -1L),
+      Seq("Cand c1", "Pc1", 6L, 40.0, 2, 0L),
+      Seq("Cand c2", "Pc2", 2L, 13.33, 3, 0L)))
+  }
+
+  test("a rollup leaderboard read passes the global-window guard") {
+    val rollup = rollupTable(servedCells)
+    val key = graft.plans.ScaleGuard.FailOnGlobalWindow
+    spark.conf.set(key, "true")
+    try assert(served(rollup).map(_(4)) === Seq(1, 2, 3))
+    finally spark.conf.unset(key)
+  }
+
+  test("a rollup leaderboard pins the ties the reference leaves open") {
+    // every candidate has a cell in the latest hour, and c0 and c1 tie
+    // on their totals: the change goes to the smallest candidate_id in
+    // the latest hour, and equal totals rank by candidate_id
+    val rollup = rollupTable(Seq(("c2", 10, 1L), ("c1", 10, 2L), ("c0", 10, 5L),
+      ("c1", 11, 4L), ("c2", 11, 3L), ("c0", 11, 1L)))
+    val first = served(rollup)
+    assert(served(rollup) === first)
+    assert(first === Seq(
+      Seq("Cand c0", "Pc0", 6L, 37.5, 1, -4L),
+      Seq("Cand c1", "Pc1", 6L, 37.5, 2, 0L),
+      Seq("Cand c2", "Pc2", 4L, 25.0, 3, 0L)))
+  }
+
+  test("an empty rollup serves an empty leaderboard of the same schema") {
+    val empty = graft.engine.VotingQueries.leaderboardFromRollup(rollupTable(Nil))
+    assert(empty.collect().isEmpty)
+    assert(empty.schema ===
+      graft.engine.VotingQueries.leaderboardFromRollup(rollupTable(servedCells)).schema)
+  }
+
   test("dedup then tally composes in one query and equals its batch twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -771,7 +827,10 @@ class StreamingSpec extends SparkSpec {
     assert(composed.map(r => (r(0), r(3))) === Seq(("v1", 1L), ("v2", 1L), ("v3", 1L)))
   }
 
-  test("a data batch through foreachBatchUpsert runs its stateful stage exactly once") {
+  /** Runs two data batches through a `foreachBatchUpsert` rollup under
+    * a fresh [[StateStoreTaskCounter]], drains it and returns it with
+    * the query's id and progress. */
+  private def countedUpsert(): (StateStoreTaskCounter, String, Seq[StreamingQueryProgress]) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def msg(i: Int, hour: Int) = voteJson(s"t$i", s"v$i", s"c${i % 3}", s"Cand ${i % 3}",
@@ -792,15 +851,30 @@ class StreamingSpec extends SparkSpec {
       val progress = q.recentProgress.toSeq
       q.stop()
       counter.drain(spark)
-      val partitions = progress.last.stateOperators.head.numShufflePartitions.toInt
-      val perBatch = counter.tasksByBatch(q.id.toString)
-      val dataBatches = progress.filter(_.numInputRows > 0).map(_.batchId)
-      assert(dataBatches.size === 2)
-      dataBatches.foreach(b => assert(perBatch.get(b) === Some(partitions),
-        s"batch $b state-store tasks ${perBatch.get(b)} vs $partitions partitions"))
-      // watermark-only batches take the same single pass
-      assert(perBatch.values.forall(_ == partitions), perBatch)
+      (counter, q.id.toString, progress)
     } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("a data batch through foreachBatchUpsert runs its stateful stage exactly once") {
+    val (counter, queryId, progress) = countedUpsert()
+    val partitions = progress.last.stateOperators.head.numShufflePartitions.toInt
+    val perBatch = counter.tasksByBatch(queryId)
+    val dataBatches = progress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(dataBatches.size === 2)
+    dataBatches.foreach(b => assert(perBatch.get(b) === Some(partitions),
+      s"batch $b state-store tasks ${perBatch.get(b)} vs $partitions partitions"))
+    // watermark-only batches take the same single pass
+    assert(perBatch.values.forall(_ == partitions), perBatch)
+  }
+
+  test("a data batch through foreachBatchUpsert runs two jobs: its count and its merge") {
+    val (counter, queryId, progress) = countedUpsert()
+    val perBatch = counter.jobsByBatch(queryId)
+    val dataBatches = progress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(dataBatches.size === 2)
+    // the second batch merges into the stored table: reading it with the
+    // batch's schema adds no schema-inference job
+    dataBatches.foreach(b => assert(perBatch.get(b) === Some(2), s"batch $b jobs $perBatch"))
   }
 
   test("a stateful checkpoint keeps its partition count across a session-profile change") {
@@ -1499,17 +1573,19 @@ class StreamingSpec extends SparkSpec {
   }
 }
 
-/** Counts, per (query id, batch id), the tasks that executed a state
-  * store: tasks of stages whose RDDs include a `StateStoreRDD` AND that
-  * opened a store. A stage that reads a persisted batch still lists the
-  * `StateStoreRDD` among its narrow ancestors, so the second condition —
-  * the stateful operator's per-task "number of state store instances"
-  * metric update — separates a real execution from a cache read.
+/** Counts, per (query id, batch id), the jobs started and the tasks that
+  * executed a state store: tasks of stages whose RDDs include a
+  * `StateStoreRDD` AND that opened a store. A stage that reads a
+  * persisted batch still lists the `StateStoreRDD` among its narrow
+  * ancestors, so the second condition — the stateful operator's per-task
+  * "number of state store instances" metric update — separates a real
+  * execution from a cache read.
   */
 private class StateStoreTaskCounter extends org.apache.spark.scheduler.SparkListener {
   import org.apache.spark.scheduler._
   private val stageBatch = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]
   private val tasks = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]
+  private val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]
   private val drainJobs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.CountDownLatch]
   @volatile private var drainLatch: java.util.concurrent.CountDownLatch = _
 
@@ -1521,8 +1597,12 @@ private class StateStoreTaskCounter extends org.apache.spark.scheduler.SparkList
       p <- props
       query <- Option(p.getProperty("sql.streaming.queryId"))
       batch <- Option(p.getProperty("streaming.sql.batchId"))
-      stage <- e.stageInfos if stage.rddInfos.exists(_.name == "StateStoreRDD")
-    } stageBatch.put(stage.stageId, (query, batch.toLong))
+    } {
+      val qb = (query, batch.toLong)
+      jobs.merge(qb, 1, Integer.sum)
+      e.stageInfos.filter(_.rddInfos.exists(_.name == "StateStoreRDD"))
+        .foreach(stage => stageBatch.put(stage.stageId, qb))
+    }
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -1545,8 +1625,13 @@ private class StateStoreTaskCounter extends org.apache.spark.scheduler.SparkList
     assert(drainLatch.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
   }
 
-  def tasksByBatch(queryId: String): Map[Long, Int] =
-    tasks.asScala.collect { case ((q, b), n) if q == queryId => b -> n }.toMap
+  def tasksByBatch(queryId: String): Map[Long, Int] = byBatch(tasks, queryId)
+
+  def jobsByBatch(queryId: String): Map[Long, Int] = byBatch(jobs, queryId)
+
+  private def byBatch(counts: java.util.concurrent.ConcurrentHashMap[(String, Long), Int],
+      queryId: String): Map[Long, Int] =
+    counts.asScala.collect { case ((q, b), n) if q == queryId => b -> n }.toMap
 }
 
 private object StateStoreTaskCounter {

@@ -106,6 +106,8 @@ class TablesSpec extends SparkSpec {
     // checkpoints are written without forking a process
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt === 1000)
+    // a small broadcast relation takes a 1 MB page, not heap/cores/16
+    assert(org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes === 1L << 20)
     assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ===
       classOf[FileSystemBasedCheckpointFileManager].getName)
     val local = FileSystem.get(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)

@@ -35,9 +35,12 @@ followed by per-query totals and the grand total. `--where` keeps only
 jobs whose local property KEY equals VALUE (repeatable), e.g.
 `--where perfbench.phase=timed`; `--totals` prints the totals only.
 
-`--by-callsite` is for batch logs: it prints instead, per call site, the
-jobs started there and their job-seconds (submission to completion),
-slowest first. A job's call site is, in order of preference:
+`--by-callsite` prints instead, per call site, the jobs started there
+and their job-seconds (submission to completion), slowest first. The
+jobs of a streaming query (those carrying `sql.streaming.queryId`) fold
+into one row, `stream <query id prefix>`, whatever their batch, so the
+jobs beside a stream (a reader's, say) show under their own call sites.
+Any other job's call site is, in order of preference:
 
   1. its `spark.job.description`, when the code set one (e.g.
      `graft.schema <path>`, `graft.gram <dir>`);
@@ -118,7 +121,8 @@ def by_callsite(lines, where):
             if any(props.get(k) != v for k, v in where):
                 continue
             stages = e.get("Stage Infos") or []
-            site = (props.get("spark.job.description")
+            site = ("stream " + props[QUERY][:8] if QUERY in props
+                    else props.get("spark.job.description")
                     or executions.get(props.get("spark.sql.execution.id"))
                     or (stages[0]["Stage Name"] if stages else "-"))
             started[e["Job ID"]] = (site, e.get("Submission Time", 0))
