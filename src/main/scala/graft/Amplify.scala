@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** SCALE-AMPLIFICATION fixture generator: a key-shifted self-union of
   * every fixture table into `copies`× the rows, built so the amplified

@@ -165,10 +165,6 @@ object Tables {
     spark.read.jdbc(url, table, partitionColumn, lowerBound, upperBound,
       numPartitions, props)
 
-  /** Register every table as a temp view (for the SQL entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** Run `f` with adaptive query execution OFF, restoring the prior
     * value after. For ITERATIVE drivers (min-label propagation,
     * power iteration) whose relations are already statically

@@ -671,7 +671,6 @@ object Dedup {
   private[graft] def loopRelations(nodes: DataFrame,
       edges: DataFrame): (DataFrame, DataFrame) = {
     val spark = nodes.sparkSession
-    import spark.implicits._
     val (sym, labels) =
       loopRelationsFrom(spark, nodes, edges.toDF("src", "dst").localCheckpoint())
     // materialize up front: an UNmaterialized InMemoryRelation under

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -660,7 +659,6 @@ object EntityResolution {
     * pruning away.
     */
   private[graft] def clusterStages(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    import spark.implicits._
     val kb = blockedPostings(spark, mentions(spark, dir))
     val joined = kb.as("a")
       .join(kb.as("b"), col("a.key") === col("b.key") &&

@@ -312,7 +312,7 @@ object Similarity {
     */
   private def ivfAssignOver(e0: DataFrame, idCol: String, embCol: String,
       numCentroids: Int, iters: Int,
-      modelKey: Option[String] = None): (DataFrame, Seq[Seq[Long]], DataFrame) = {
+      modelKey: Option[String]): (DataFrame, Seq[Seq[Long]], DataFrame) = {
     val spark = e0.sparkSession
     import spark.implicits._
     // cache = a projection-collapse BARRIER, not just reuse: without
@@ -930,22 +930,11 @@ object Similarity {
   }
 
   /** The M sub-codes packed into ONE `codes` array column per vector
-    * (r15, guide §2.3/§1.2-1): the row-per-(m, scode) [[pqEnc]] shape
-    * multiplied every candidate by M through the ADC LUT join and a
-    * corpus×M-row hash aggregate; packed codes keep the scan at one
-    * row per vector and the ADC becomes [[adcFoldCol]]'s in-expression
-    * M-lookup fold — identical integer sums, M× fewer rows, one fewer
-    * exchange. [[pqEnc]] stays as the streaming-encoder output shape
-    * ([[pqEncodeWith]]).
-    */
-  private def pqEncArr(coded: DataFrame,
-      books: IndexedSeq[IndexedSeq[IndexedSeq[Long]]]): DataFrame =
-    withSubCodes(coded, books).select(col("vec_id"),
-      array((0 until PqSubspaces).map(m => col(s"sc$m").cast("long")): _*)
-        .as("codes"))
-
-  /** [[pqEncArr]] keeping the full-width codes next to the sub-codes —
-    * the shortlist carries `vc` through the ADC window so the exact
+    * (r15): the row-per-(m, scode) [[pqEnc]] shape multiplied every
+    * candidate by M through the ADC LUT join; packed codes keep the
+    * scan at one row per vector and the ADC becomes [[adcFoldCol]]'s
+    * in-expression M-lookup fold. The full-width codes `vc` ride
+    * along: the shortlist carries them through the ADC window so the exact
     * rerank runs in the SAME post-exchange stage (both windows key on
     * q_id) instead of joining back to the coded frame: one fewer
     * exchange + broadcast-build + coded re-scan per cascade (r16). The
@@ -958,26 +947,6 @@ object Similarity {
       array((0 until PqSubspaces).map(m => col(s"sc$m").cast("long")): _*)
         .as("codes"),
       col("vc"))
-
-  /** Per-query ADC LOOKUP TABLE as ONE `pts` array per query row —
-    * entry `m·K + scode` holds the dot (or, for the residual L2 form,
-    * the squared distance) of query subvector `m` with codebook entry
-    * `scode`. The codebooks are driver literals, so the whole LUT is
-    * a pure projection over the (tiny) query frame's `vc` — no
-    * explode, no book join. Same integers as the old row-per-entry
-    * LUT, row-packed for [[adcFoldCol]].
-    */
-  private def pqLutArrCol(books: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-      squared: Boolean): Column = {
-    val kernel = if (squared) "(a - b) * (a - b)" else "a * b"
-    array((for {
-      m <- 0 until PqSubspaces; c <- 0 until PqCentroids
-    } yield expr(
-      s"""aggregate(zip_with(slice(vc, ${m * PqSubDims + 1}, $PqSubDims),
-         |  array(${books(m)(c).mkString(", ")}),
-         |  (a, b) -> $kernel), CAST(0 AS BIGINT), (s, t) -> s + t)"""
-        .stripMargin)): _*)
-  }
 
   /** The ADC sum over packed `codes`/`pts` columns: Σₘ
     * pts[m·K + codes[m]] — eight in-expression array lookups per
@@ -1013,9 +982,10 @@ object Similarity {
       .sortBy(_._1).toIndexedSeq
   }
 
-  /** Driver twin of [[pqLutArrCol]] over one collected query-code
-    * array — same Long arithmetic, same m·K + c layout, so the pts
-    * arrays are bit-identical to the expression form's.
+  /** Per-query ADC LOOKUP TABLE over one collected query-code array:
+    * entry `m·K + c` holds the dot (or, for the residual L2 form, the
+    * squared distance) of query subvector `m` with codebook entry `c`,
+    * the `pts` layout [[adcFoldCol]] reads.
     */
   private def lutArrOf(vc: IndexedSeq[Long],
       books: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],

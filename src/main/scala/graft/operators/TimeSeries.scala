@@ -308,33 +308,22 @@ object TimeSeries {
   /** OHLC resampling — the downsampling verb every time-series store
     * ships (candles for dashboards, minute→hour compaction for
     * retention): per (event_type, hour) the opening / highest / lowest
-    * / closing value plus volume and total. One keyed hash aggregate
-    * with map-side partials — never a per-group sort. Open/close are
-    * `min_by`/`max_by` over a TOTALLY ORDERED string key
-    * (zero-padded micros ++ event_id), because a bare ts order key
-    * ties on simultaneous events and both engines would then pick
-    * arbitrarily — the key makes the election deterministic and
-    * DuckDB's `min_by`/`max_by` replay it exactly. Values are exact
-    * cents so every column is integer.
+    * / closing value plus volume and total. The cells are the streaming
+    * operator's, [[graft.streaming.EventStreams.ohlcCandles]], over the
+    * bounded table (the analyzer drops `withWatermark` on a batch
+    * frame), so live and backfilled candles agree by construction; `ts`
+    * is cast to TIMESTAMP first, so the hour is `unix_micros(ts) div
+    * 3600000000`, as the oracle computes it. An event with a null `ts`
+    * falls in no window and forms no cell, as in the stream.
     */
-  def ohlcHourly(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.load(spark, dir, "events")
-      .select($"event_type",
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000").as("hour"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-        expr("""concat(lpad(CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS STRING), 20, '0'),
-               |  lpad(CAST(event_id AS STRING), 12, '0'))""".stripMargin).as("ok"))
-      .groupBy($"event_type", $"hour")
-      .agg(
-        min_by($"cents", $"ok").as("open_cents"),
-        max($"cents").as("high_cents"),
-        min($"cents").as("low_cents"),
-        max_by($"cents", $"ok").as("close_cents"),
-        count(lit(1)).as("volume"),
-        sum($"cents").as("total_cents"))
-      .orderBy($"event_type", $"hour")
-  }
+  def ohlcHourly(spark: SparkSession, dir: String): DataFrame =
+    graft.streaming.EventStreams.ohlcCandles(Tables.load(spark, dir, "events")
+        .withColumn("ts", col("ts").cast("timestamp")))
+      .select(col("event_type"),
+        expr("unix_micros(window.start) div 3600000000").as("hour"),
+        col("open_cents"), col("high_cents"), col("low_cents"),
+        col("close_cents"), col("volume"), col("total_cents"))
+      .orderBy(col("event_type"), col("hour"))
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_scd2_join" -> scd2Enrich _,

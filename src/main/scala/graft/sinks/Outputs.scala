@@ -19,10 +19,6 @@ object Outputs {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(path)
 
-  /** Parquet append sink — the fixtures' at-rest format. */
-  def parquetAppend(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
   /** JSON-lines export of the Kafka value shape (replayable stream
     * input).
     */

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+
+import DeltaTree.{among, notTombstoned}
 
 /** The reference's declared streaming topology (SURVEY §3.3), natively
   * in Structured Streaming: Kafka-shaped JSON votes in, two windowed
@@ -240,15 +240,14 @@ object EventStreams {
   private[graft] def applySpanBatch(batch: DataFrame, storeDir: String,
       layoutDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val tombs = tombstoneIds(spark, storeDir, "doc_id")
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(storeDir), "doc_id")
     val b = batch.select(col("doc_id"), col("text"))
       .filter(notTombstoned(col("doc_id"), tombs)).persist()
     try {
-      val parts = spanStoreParts(storeDir, excludeBatch = batchId)
+      val parts = DeltaTree.parts(storeDir, exclude = _ == s"b$batchId")
       val store = (if (parts.isEmpty)
           spark.range(0).select(col("id").as("doc_id"), col("id").as("fp"))
-        else spark.read.option("recursiveFileLookup", "true")
-          .parquet(parts: _*))
+        else DeltaTree.read(spark, parts: _*))
         .select(col("doc_id"), col("fp"))
         .filter(notTombstoned(col("doc_id"), tombs))
       graft.operators.TextAnalysis.spanPairsIncremental(b, store)
@@ -257,18 +256,6 @@ object EventStreams {
         .write.mode("overwrite").parquet(s"$storeDir/b$batchId")
     } finally { b.unpersist(); () }
   }
-
-  /** Generation dirs of a winnow-fingerprint store minus the batch's
-    * own delta — [[applySpanBatch]]'s replay-safe probe list (the
-    * `labelStoreParts` rule with the span trees' wider base grammar:
-    * seeds are written as bare `base`).
-    */
-  private def spanStoreParts(storeDir: String,
-      excludeBatch: Long): Seq[String] =
-    subDirs(storeDir).filter { p =>
-      val n = p.getFileName.toString
-      n.matches("base(_\\d+)?") || (n.matches("b\\d+") && n != s"b$excludeBatch")
-    }.map(_.toString).sorted
 
   /** Read back the maintained span-pair relation: the initial layout
     * plus every micro-batch delta [[maintainSpanLayout]] appended.
@@ -299,8 +286,8 @@ object EventStreams {
     // an endpoint never changes a SURVIVING pair's row, so the
     // endpoint filter alone restores batch-over-survivors semantics
     // (modulo the df-cap uncross class takedownSpanDocs reports).
-    val tombs = tombstoneIds(spark, layoutDir, "doc_id")
-    spark.read.option("recursiveFileLookup", "true").parquet(layoutDir)
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(layoutDir), "doc_id")
+    DeltaTree.read(spark, layoutDir)
       .select(col("doc_a"), col("doc_b"), col("n_shared_spans"))
       .filter(notTombstoned(col("doc_a"), tombs) &&
         notTombstoned(col("doc_b"), tombs))
@@ -323,14 +310,12 @@ object EventStreams {
     * maintainer (the same discipline every lakehouse OPTIMIZE
     * requires). Batch-replay safety does NOT rely on the compactor
     * observing checkpoint commits: the newest delta is fenced out of
-    * every fold ([[compactDeltaTree]]'s replay fence), so even a
+    * every fold ([[DeltaTree.compact]]'s replay fence), so even a
     * crash-before-commit → compact → restart replay overwrites its own
     * still-present delta instead of re-appending compacted rows. The
-    * swap is staged for no-data-loss: the new base is written to a sibling tmp dir, the
-    * old generation is RENAMED to a sibling trash dir (both outside
-    * the reader's scope), the new base moves in, then trash is
-    * deleted — an interruption at any point leaves all rows in either
-    * the layout or the trash sibling, never deleted-but-unreplaced.
+    * swap is staged for no-data-loss and an interrupted one is
+    * finished or undone before the next compaction counts deltas (see
+    * [[DeltaTree.compact]]).
     *
     * Triggers on delta COUNT (small-file pressure: each delta is at
     * least one task + footer fetch regardless of size) OR on total
@@ -347,9 +332,9 @@ object EventStreams {
     // takedown face: compaction physically erases pair rows touching a
     // taken-down endpoint (the fenced newest delta stays raw until a
     // newer batch unfences it — the shared fence caveat)
-    val tombs = tombstoneIds(spark, layoutDir, "doc_id")
-    compactDeltaTree(layoutDir, maxDeltas, maxDeltaBytes) { (tmp, parts) =>
-      readParts(spark, parts)
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(layoutDir), "doc_id")
+    DeltaTree.compact(layoutDir, maxDeltas, maxDeltaBytes) { (tmp, parts) =>
+      DeltaTree.read(spark, parts: _*)
         .select(col("doc_a"), col("doc_b"), col("n_shared_spans"))
         .filter(notTombstoned(col("doc_a"), tombs) &&
           notTombstoned(col("doc_b"), tombs))
@@ -373,9 +358,9 @@ object EventStreams {
   def compactSpanStore(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, maxDeltas: Int = 8, files: Int = 4,
       maxDeltaBytes: Long = Long.MaxValue): Boolean = {
-    val tombs = tombstoneIds(spark, storeDir, "doc_id")
-    compactDeltaTree(storeDir, maxDeltas, maxDeltaBytes) { (tmp, parts) =>
-      readParts(spark, parts)
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(storeDir), "doc_id")
+    DeltaTree.compact(storeDir, maxDeltas, maxDeltaBytes) { (tmp, parts) =>
+      DeltaTree.read(spark, parts: _*)
         .filter(notTombstoned(col("doc_id"), tombs))
         .repartitionByRange(files, col("fp"))
         .sortWithinPartitions(col("fp"))
@@ -426,20 +411,10 @@ object EventStreams {
       maxDf: Int = graft.operators.TextAnalysis.MaxSpanDf): DataFrame = {
     import spark.implicits._
     require(docIds.nonEmpty, "a takedown names at least one doc_id")
-    val existing = genIds(s"$storeDir/_tombstones", "t") ++
-      genIds(s"$layoutDir/_tombstones", "t")
-    require(existing.isEmpty || tombId >= existing.max,
-      s"takedown tombId $tombId is below the already-applied generation " +
-        s"${existing.max} — tombIds must be monotonically increasing " +
-        "(equal to the newest = exact replay of that takedown); a reused " +
-        "lower id would overwrite an earlier takedown's ledger generation " +
-        "and silently resurrect its docs")
-    val ledger = docIds.toDF("doc_id").localCheckpoint()
-    ledger.write.mode("overwrite").parquet(s"$storeDir/_tombstones/t$tombId")
-    ledger.write.mode("overwrite").parquet(s"$layoutDir/_tombstones/t$tombId")
-    val tombs = tombstoneIds(spark, storeDir, "doc_id")
-    val fpsAll = spark.read
-      .option("recursiveFileLookup", "true").parquet(storeDir)
+    DeltaTree.appendLedger(tombId, DeltaTree.ledgerOf(storeDir),
+      DeltaTree.ledgerOf(layoutDir))(docIds.toDF("doc_id").localCheckpoint())
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(storeDir), "doc_id")
+    val fpsAll = DeltaTree.read(spark, storeDir)
       .select(col("doc_id"), col("fp"))
     val dFps = fpsAll.filter(col("doc_id").isInCollection(docIds))
       .select(col("fp")).distinct()
@@ -468,7 +443,7 @@ object EventStreams {
     * ([[takedownSpanDocs]]) asks for, and the span twin of
     * [[rebuildCascadeStores]]: one batch [[graft.operators.TextAnalysis.sharedSpansOf]]
     * over the tombstone-filtered store, staged-swapped in as a single
-    * range-clustered `base_0`.
+    * range-clustered `base_0` ([[DeltaTree.rebuild]]).
     *
     * REPLAY FENCE, disjoint-append edition: the newest `b<id>` layout
     * delta is KEPT (a restarting stream replays its batch and
@@ -486,183 +461,34 @@ object EventStreams {
     */
   def rebuildSpanLayout(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, layoutDir: String, files: Int = 8): Unit = {
-    import java.nio.file.{Files, Paths}
-    val tombs = tombstoneIds(spark, storeDir, "doc_id")
-    val fps = spark.read
-      .option("recursiveFileLookup", "true").parquet(storeDir)
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(storeDir), "doc_id")
+    val fps = DeltaTree.read(spark, storeDir)
       .select(col("doc_id"), col("fp"))
       .filter(notTombstoned(col("doc_id"), tombs))
     val full = graft.operators.TextAnalysis.sharedSpansOf(fps)
-    val genDirs = subDirs(layoutDir).filter(
-      _.getFileName.toString.matches("base(_\\d+)?|b\\d+|cd\\d+"))
-    val bNames = genDirs.map(_.getFileName.toString).filter(_.matches("b\\d+"))
-    val keep = if (bNames.isEmpty) None
-      else Some(bNames.maxBy(_.drop(1).toLong))
-    val rebuilt = keep match {
-      case None => full
-      case Some(d) =>
-        val kept = spark.read.parquet(s"$layoutDir/$d")
-          .select(col("doc_a"), col("doc_b"))
-        full.join(kept, Seq("doc_a", "doc_b"), "left_anti")
+    DeltaTree.rebuild(layoutDir, fenced = true) { (tmp, kept) =>
+      kept.fold(full)(k => full.join(
+          DeltaTree.read(spark, k).select(col("doc_a"), col("doc_b")),
+          Seq("doc_a", "doc_b"), "left_anti"))
+        .repartitionByRange(files, col("doc_a"))
+        .sortWithinPartitions(col("doc_a"), col("doc_b"))
+        .write.mode("overwrite").parquet(tmp)
     }
-    val tmp = s"$layoutDir.rebuilding"
-    deleteRecursively(Paths.get(tmp))
-    rebuilt.repartitionByRange(files, col("doc_a"))
-      .sortWithinPartitions(col("doc_a"), col("doc_b"))
-      .write.mode("overwrite").parquet(tmp)
-    val trash = Paths.get(s"$layoutDir.trash")
-    deleteRecursively(trash)
-    Files.createDirectories(trash)
-    genDirs.filter(p => !keep.contains(p.getFileName.toString))
-      .foreach(p => Files.move(p, trash.resolve(p.getFileName.toString)))
-    Files.move(Paths.get(tmp), Paths.get(layoutDir).resolve("base_0"))
-    deleteRecursively(trash)
   }
 
   /** STORE-SIDE takedown audit for a span-tree pair —
     * [[erasureAuditCascade]]'s span twin: raw fingerprint rows still
     * carrying a taken-down id, raw pair rows naming it as either
-    * endpoint, and the permanent ledger row. One conditional-
-    * aggregation scan per tree.
+    * endpoint, and the permanent ledger row ([[DeltaTree.erasureAudit]]).
     */
   def erasureAuditSpan(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, layoutDir: String, docIds: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    def inIds(c: Column) =
-      if (docIds.isEmpty) lit(false) else c.isInCollection(docIds)
-    def cnt(df: DataFrame, cond: Column) =
-      df.agg(count(when(cond, lit(1)))).head().getLong(0)
-    def raw(dir: String) = spark.read
-      .option("recursiveFileLookup", "true").parquet(dir)
-    val ledger =
-      if (subDirs(s"$storeDir/_tombstones").isEmpty) 0L
-      else cnt(raw(s"$storeDir/_tombstones"), inIds(col("doc_id")))
-    Seq(
-      ("fp_store", cnt(raw(storeDir), inIds(col("doc_id")))),
-      ("span_pairs", cnt(raw(layoutDir),
-        inIds(col("doc_a")) || inIds(col("doc_b")))),
-      ("tombstone_record", ledger))
-      .toDF("store", "n_raw_rows_referencing")
-  }
-
-  /** The shared trigger + staged no-data-loss swap every delta-tree
-    * compactor here delegates to. Triggers when the delta count —
-    * `b<id>` batch deltas AND `cd<id>` re-verdict deltas together —
-    * reaches `maxDeltas` OR their data bytes reach `maxDeltaBytes`
-    * (DATA files only — `_SUCCESS`/`.crc` bookkeeping
-    * would inflate it; the stat pass is skipped entirely under the
-    * default unbounded threshold, where the count trigger is the only
-    * one armed). Only recognized GENERATION dirs are ever counted,
-    * folded, or trashed — a `_keys` materialization or any foreign
-    * entry under the tree is left untouched. On trigger: 1. the caller writes the compacted
-    * generation — a fold of exactly the part directories it is handed —
-    * to a sibling tmp dir OUTSIDE the reader's scope, 2. the folded
-    * parts are RENAMED into a trash sibling (no data destroyed),
-    * 3. the new base moves in as `base_0`, 4. trash is dropped — an
-    * interruption at any point leaves all rows in either the tree or
-    * the trash sibling, never deleted-but-unreplaced.
-    *
-    * REPLAY FENCE (r14): the NEWEST `b<id>` delta is never folded and
-    * never trashed — it stays in place beside the new base.
-    * `foreachBatch` redelivers only the last batch, and a
-    * between-batches compactor cannot observe whether that batch's
-    * checkpoint offset committed: fold its delta into `base_0` and a
-    * crash-before-commit → compact → restart sequence would turn the
-    * replay's per-directory overwrite into a re-APPEND of rows the
-    * base already holds (duplicate doc_ids in the served corpus,
-    * inflated bucket counts). Left in place, a replay still overwrites
-    * `b<id>` idempotently, and the next compaction folds it once a
-    * newer batch exists. Costs one unfolded delta per tree — bounded,
-    * and ServingMaintenanceSpec drives the crash-compact-replay
-    * sequence both ways.
-    *
-    * `includeFenced = true` is the QUIESCED DRAIN (r15 review): fold
-    * the fenced delta too. Only the two upsert-store compactors expose
-    * it ([[compactMatchesStore]]/[[compactCatalogStore]], for the
-    * erasure sign-off of a STOPPED stream — see there for why replay
-    * stays content-idempotent on those trees even after a drain);
-    * append-fold trees (span layout, cascade docs/bands/minima) never
-    * drain — folding their fenced delta turns a replay into the
-    * re-append the fence exists to prevent.
-    */
-  private def compactDeltaTree(dir: String, maxDeltas: Int,
-      maxDeltaBytes: Long = Long.MaxValue, includeFenced: Boolean = false)(
-      writeBase: (String, Seq[String]) => Unit): Boolean = {
-    import java.nio.file.{Files, Path, Paths}
-    val root = Paths.get(dir)
-    if (!Files.isDirectory(root)) return false
-    def entries(p: Path): Seq[Path] = {
-      val s = Files.list(p)
-      try s.iterator().asScala.toVector finally s.close()
-    }
-    // generation dirs ONLY — base generations, `b<id>` deltas, `cd<id>`
-    // re-verdict deltas. Anything else under the tree (a `_keys`
-    // materialization, foreign files) is neither counted, folded, nor
-    // trashed.
-    val genDirs = subDirs(dir).filter(
-      _.getFileName.toString.matches("base(_\\d+)?|b\\d+|cd\\d+"))
-    // the trigger counts BOTH delta kinds (r14 ADVICE: cd re-verdict
-    // deltas are folded anyway, so letting them accumulate uncounted
-    // made a catalog-delta-heavy workload re-fold an unbounded
-    // directory list on every read)
-    val deltaDirs = genDirs.filter(
-      _.getFileName.toString.matches("(b|cd)\\d+"))
-    val deltaBytes =
-      if (maxDeltaBytes == Long.MaxValue) 0L
-      else deltaDirs.flatMap(entries)
-        .filter(p => Files.isRegularFile(p) && {
-          val n = p.getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        }).map(Files.size).sum
-    if (deltaDirs.size < maxDeltas && deltaBytes < maxDeltaBytes) return false
-    // the fence guards `b<id>` deltas only: they are what foreachBatch
-    // redelivers. `cd<id>` deltas fold freely — a re-applied catalog
-    // delta recomputes identical rows whose gen outranks the folded
-    // base (see compactMatchesStore)
-    val bDirs = deltaDirs.filter(_.getFileName.toString.matches("b\\d+"))
-    val newest =
-      if (includeFenced || bDirs.isEmpty) None
-      else Some(bDirs.maxBy(_.getFileName.toString.drop(1).toLong))
-    // nothing to fold but the fenced delta itself → decline (a rewrite
-    // of base alone reclaims nothing and would re-trigger every call);
-    // the next batch unfences this one
-    if (deltaDirs.count(p => !newest.contains(p)) == 0) return false
-    val folded = genDirs.filter(p => !newest.contains(p))
-    val tmp = dir + ".compacting"
-    writeBase(tmp, folded.map(_.toString))
-    val trash = Paths.get(dir + ".trash")
-    deleteRecursively(trash)
-    Files.createDirectories(trash)
-    folded.foreach(p =>
-      Files.move(p, trash.resolve(p.getFileName.toString)))
-    Files.move(Paths.get(tmp), root.resolve("base_0"))
-    deleteRecursively(trash)
-    true
-  }
-
-  /** Scan exactly the given part directories of a delta tree — the
-    * read every compactor folds from (never the tree root: the newest
-    * delta is fenced out of folds, see [[compactDeltaTree]]).
-    */
-  private def readParts(spark: org.apache.spark.sql.SparkSession,
-      parts: Seq[String]): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(parts: _*)
-
-  /** Immediate SUBDIRECTORIES of a store tree — the one listing every
-    * generation-grammar filter reads ([[compactDeltaTree]],
-    * [[labelStoreParts]], [[matchesStoreParts]], [[genIds]]; r15
-    * review: four hand-rolled Files.list copies had already let the
-    * base-generation regex diverge once). Empty if the tree doesn't
-    * exist yet.
-    */
-  private def subDirs(dir: String): Seq[java.nio.file.Path] = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(dir)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val s = Files.list(root)
-    try s.iterator().asScala.toVector.filter(Files.isDirectory(_))
-    finally s.close()
-  }
+      storeDir: String, layoutDir: String, docIds: Seq[Long]): DataFrame =
+    DeltaTree.erasureAudit(spark,
+      ("fp_store", storeDir, among(col("doc_id"), docIds)),
+      ("span_pairs", layoutDir,
+        among(col("doc_a"), docIds) || among(col("doc_b"), docIds)),
+      ("tombstone_record", DeltaTree.ledgerOf(storeDir),
+        among(col("doc_id"), docIds)))
 
   /** Seed a streaming-maintained LABEL STORE: the converged label
     * table `(doc_id, cluster_id)` — yesterday's full-loop artifact —
@@ -672,18 +498,17 @@ object EventStreams {
     * touched components' row groups.
     */
   def labelStoreInit(labels: DataFrame, storeDir: String, files: Int = 4): Unit =
+    writeLabelBase(labels, s"$storeDir/base_0", files)
+
+  /** A label base generation — gen 0, range-clustered on `cluster_id` —
+    * written to `path`: the seed, a compaction's fold, a rebuild.
+    */
+  private def writeLabelBase(labels: DataFrame, path: String, files: Int): Unit =
     labels.select(col("doc_id"), col("cluster_id"))
       .withColumn("gen", lit(0L))
       .repartitionByRange(files, col("cluster_id"))
       .sortWithinPartitions(col("cluster_id"))
-      .write.mode("overwrite").parquet(s"$storeDir/base_0")
-
-  private def labelStoreParts(storeDir: String,
-      excludeBatch: Long = -1L): Seq[String] =
-    subDirs(storeDir).filter { p =>
-      val n = p.getFileName.toString
-      n.matches("base_\\d+") || (n.matches("b\\d+") && n != s"b$excludeBatch")
-    }.map(_.toString).sorted
+      .write.mode("overwrite").parquet(path)
 
   /** Read the maintained label store: base generation + every
     * micro-batch delta, LATEST generation wins per doc (deltas are
@@ -701,21 +526,17 @@ object EventStreams {
     // crash window between a takedown's ledger write and its repair
     // swap — the repair removes tombstoned rows physically, so the
     // filter is usually a no-op. The standalone ledger lives in the
-    // `<storeDir>.tombstones` SIBLING, not inside the tree: the repair
-    // replaces the whole tree directory ([[replaceLabelTree]]), and an
-    // inner ledger would be destroyed by its own takedown's swap. For
-    // cascade/embedding trees (ledger at the tree ROOT) the sibling
-    // never exists and their call sites filter with the root ledger.
-    foldLabelStore(spark.read.option("recursiveFileLookup", "true")
-      .parquet(labelStoreParts(storeDir): _*))
+    // `<storeDir>.tombstones` SIBLING, not inside the tree (see
+    // [[labelLedgerDir]]). For cascade/embedding trees (ledger at the
+    // tree ROOT) the sibling never exists and their call sites filter
+    // with the root ledger.
+    readLabelStoreRaw(spark, storeDir)
       .filter(notTombstoned(col("doc_id"),
-        tombstoneIdsAt(spark, labelLedgerDir(storeDir), "doc_id")))
+        DeltaTree.ledgerIds(spark, labelLedgerDir(storeDir), "doc_id")))
   }
 
   /** The standalone label store's takedown-ledger location — a SIBLING
-    * of the tree (see [[readLabelStore]]: the repair swap replaces the
-    * tree directory wholesale, so the permanent ledger cannot live
-    * inside it).
+    * of the tree, outside the directory the repair swap rewrites.
     */
   private def labelLedgerDir(storeDir: String): String =
     s"$storeDir.tombstones"
@@ -727,8 +548,7 @@ object EventStreams {
     */
   private def readLabelStoreRaw(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): DataFrame =
-    foldLabelStore(spark.read.option("recursiveFileLookup", "true")
-      .parquet(labelStoreParts(storeDir): _*))
+    foldLabelStore(DeltaTree.read(spark, DeltaTree.parts(storeDir): _*))
 
   private def foldLabelStore(parts: DataFrame): DataFrame =
     parts.groupBy(col("doc_id"))
@@ -806,12 +626,11 @@ object EventStreams {
     // resurrect it as a node or re-merge its repaired component. For
     // cascade/embedding trees (root-level ledger) this sibling ledger
     // is empty and their apply seams gate upstream.
-    val ledgerIds = tombstoneIdsAt(spark, labelLedgerDir(labelDir), "doc_id")
+    val ledgerIds = DeltaTree.ledgerIds(spark, labelLedgerDir(labelDir), "doc_id")
     val gated = edges.filter(notTombstoned(col("src"), ledgerIds) &&
       notTombstoned(col("dst"), ledgerIds))
-    val store = foldLabelStore(
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(labelStoreParts(labelDir, excludeBatch = batchId): _*))
+    val store = foldLabelStore(DeltaTree.read(spark,
+      DeltaTree.parts(labelDir, exclude = _ == s"b$batchId"): _*))
     val delta =
       try graft.operators.Dedup.clustersIncrementalDelta(store, gated,
         maxReps = maxReps)
@@ -839,22 +658,17 @@ object EventStreams {
     * latest-wins aggregate) into ONE gen-0 base, range-clustered on
     * `cluster_id` like [[labelStoreInit]]'s. Same single-maintainer,
     * between-batches contract and same staged no-data-loss swap as
-    * [[compactSpanLayout]] (tmp write → trash rename → move in → drop
-    * trash). Returns true iff a compaction ran.
+    * [[compactSpanLayout]]. Returns true iff a compaction ran.
     */
   def compactLabelStore(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, maxDeltas: Int = 8, files: Int = 4): Boolean = {
     // takedown face: defensive physical erasure against the tree's own
     // ledger — the repair swap already removed tombstoned rows, so
     // this only bites in the crash window before a takedown's re-run
-    val tombs = tombstoneIdsAt(spark, labelLedgerDir(storeDir), "doc_id")
-    compactDeltaTree(storeDir, maxDeltas) { (tmp, parts) =>
-      foldLabelStore(readParts(spark, parts))
-        .filter(notTombstoned(col("doc_id"), tombs))
-        .withColumn("gen", lit(0L))
-        .repartitionByRange(files, col("cluster_id"))
-        .sortWithinPartitions(col("cluster_id"))
-        .write.mode("overwrite").parquet(tmp)
+    val tombs = DeltaTree.ledgerIds(spark, labelLedgerDir(storeDir), "doc_id")
+    DeltaTree.compact(storeDir, maxDeltas) { (tmp, parts) =>
+      writeLabelBase(foldLabelStore(DeltaTree.read(spark, parts: _*))
+        .filter(notTombstoned(col("doc_id"), tombs)), tmp, files)
     }
   }
 
@@ -876,9 +690,9 @@ object EventStreams {
     * the survivor set, so over-delivery is harmless.
     *
     * The ledger (`t<id>` generations in the `<storeDir>.tombstones`
-    * SIBLING — outside the tree, which the repair swap replaces
-    * wholesale) additionally gates [[readLabelStore]] (crash-window
-    * defense) and the edge-ingest boundary (`writeLabelDelta` drops
+    * SIBLING, [[labelLedgerDir]]) additionally gates
+    * [[readLabelStore]] (crash-window defense) and the edge-ingest
+    * boundary (`writeLabelDelta` drops
     * edges naming a taken-down id, so a replayed batch or a late edge
     * cannot resurrect the node or re-merge the repaired component),
     * and [[compactLabelStore]] erases defensively. Single-maintainer
@@ -893,15 +707,8 @@ object EventStreams {
     import spark.implicits._
     require(docIds.nonEmpty, "a takedown names at least one doc_id")
     val tombDir = labelLedgerDir(storeDir)
-    val existing = genIds(tombDir, "t")
-    require(existing.isEmpty || tombId >= existing.max,
-      s"takedown tombId $tombId is below the already-applied generation " +
-        s"${existing.max} — tombIds must be monotonically increasing " +
-        "(equal to the newest = exact replay of that takedown); a reused " +
-        "lower id would overwrite an earlier takedown's ledger generation " +
-        "and silently resurrect its docs")
-    docIds.toDF("doc_id").write.mode("overwrite").parquet(s"$tombDir/t$tombId")
-    val tombs = tombstoneIdsAt(spark, tombDir, "doc_id")
+    DeltaTree.appendLedger(tombId, tombDir)(docIds.toDF("doc_id"))
+    val tombs = DeltaTree.ledgerIds(spark, tombDir, "doc_id")
     repairLabelTree(spark, storeDir, docIds, tombs, maxHops, files)(
       survivorEdges)
   }
@@ -913,23 +720,12 @@ object EventStreams {
     * the permanent ledger row.
     */
   def erasureAuditLabels(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, docIds: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    def inIds(c: Column) =
-      if (docIds.isEmpty) lit(false) else c.isInCollection(docIds)
-    def cnt(df: DataFrame, cond: Column) =
-      df.agg(count(when(cond, lit(1)))).head().getLong(0)
-    val ledger =
-      if (subDirs(labelLedgerDir(storeDir)).isEmpty) 0L
-      else cnt(spark.read.option("recursiveFileLookup", "true")
-        .parquet(labelLedgerDir(storeDir)), inIds(col("doc_id")))
-    Seq(
-      ("labels", cnt(spark.read.option("recursiveFileLookup", "true")
-        .parquet(labelStoreParts(storeDir): _*),
-        inIds(col("doc_id")) || inIds(col("cluster_id")))),
-      ("tombstone_record", ledger))
-      .toDF("store", "n_raw_rows_referencing")
-  }
+      storeDir: String, docIds: Seq[Long]): DataFrame =
+    DeltaTree.erasureAudit(spark,
+      ("labels", storeDir,
+        among(col("doc_id"), docIds) || among(col("cluster_id"), docIds)),
+      ("tombstone_record", labelLedgerDir(storeDir),
+        among(col("doc_id"), docIds)))
 
   // ------------------------------------------------------------------
   // ER matches-layout maintenance (the streaming twin of
@@ -986,7 +782,7 @@ object EventStreams {
     // cluster executors can read it, its lifecycle is the layout's
     // (deleting the tree deletes it, a new stream overwrites it), the
     // `_` prefix hides it from the layout's recursive read (Spark's
-    // file index skips `_`/`.`-prefixed paths), and compactDeltaTree
+    // file index skips `_`/`.`-prefixed paths), and DeltaTree.compact
     // folds recognized generation dirs only. Each batch pays two
     // dimension-sized scans; their schemas are inferred once
     // (Tables.parquet), not per batch.
@@ -1014,7 +810,7 @@ object EventStreams {
     */
   def readMatchesLayout(spark: org.apache.spark.sql.SparkSession,
       layoutDir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(layoutDir)
+    DeltaTree.read(spark, layoutDir)
       .select(col("mention_id"), col("mention"), col("matched_id"),
         col("dist"), col("correct"))
 
@@ -1026,8 +822,8 @@ object EventStreams {
   def compactMatchesLayout(spark: org.apache.spark.sql.SparkSession,
       layoutDir: String, maxDeltas: Int = 8, files: Int = 4,
       maxDeltaBytes: Long = Long.MaxValue): Boolean =
-    compactDeltaTree(layoutDir, maxDeltas, maxDeltaBytes) { (tmp, parts) =>
-      readParts(spark, parts)
+    DeltaTree.compact(layoutDir, maxDeltas, maxDeltaBytes) { (tmp, parts) =>
+      DeltaTree.read(spark, parts: _*)
         .select(col("mention_id"), col("mention"), col("matched_id"),
           col("dist"), col("correct"))
         .repartitionByRange(files, col("mention_id"))
@@ -1110,7 +906,7 @@ object EventStreams {
     */
   def readCatalogStore(spark: org.apache.spark.sql.SparkSession,
       catalogDir: String): DataFrame =
-    foldCatalog(readParts(spark, labelStoreParts(catalogDir)))
+    foldCatalog(DeltaTree.read(spark, DeltaTree.parts(catalogDir): _*))
 
   /** Generation compaction for the evolving catalog store (r14 verdict
     * #3 — every other delta tree had one): fold base + deltas
@@ -1140,9 +936,9 @@ object EventStreams {
   def compactCatalogStore(spark: org.apache.spark.sql.SparkSession,
       catalogDir: String, maxDeltas: Int = 8, files: Int = 2,
       quiesced: Boolean = false): Boolean =
-    compactDeltaTree(catalogDir, maxDeltas, includeFenced = quiesced) {
+    DeltaTree.compact(catalogDir, maxDeltas, includeFenced = quiesced) {
       (tmp, parts) =>
-        foldCatalogFull(readParts(spark, parts))
+        foldCatalogFull(DeltaTree.read(spark, parts: _*))
           .filter(!col("deleted"))
           .select(col("ent_name"), col("ent_id"), col("deleted"), col("gen"))
           .repartitionByRange(files, col("ent_id"))
@@ -1165,18 +961,6 @@ object EventStreams {
       .sortWithinPartitions(col("mention_id"))
       .write.mode("overwrite").parquet(s"$layoutDir/base_0")
 
-  /** Part directories of the matches store: base generations, mention
-    * ingest deltas, and catalog re-verdict deltas — minus an excluded
-    * `cd<id>` (the own-delta replay exclusion of [[applyCatalogDelta]]).
-    */
-  private def matchesStoreParts(layoutDir: String,
-      excludeCd: Long = -1L): Seq[String] =
-    subDirs(layoutDir).filter { p =>
-      val n = p.getFileName.toString
-      n.matches("base_\\d+") || n.matches("b\\d+") ||
-        (n.matches("cd\\d+") && n != s"cd$excludeCd")
-    }.map(_.toString).sorted
-
   /** Latest verdict per mention. Keeps the winning row's `gen`: the
     * compactor persists it — folding a cd re-verdict (gen > 0) into a
     * gen-0 base row would TIE with the replay-fenced newest mention
@@ -1198,7 +982,7 @@ object EventStreams {
     */
   def readMatchesStore(spark: org.apache.spark.sql.SparkSession,
       layoutDir: String): DataFrame =
-    foldMatchesStore(readParts(spark, matchesStoreParts(layoutDir)))
+    foldMatchesStore(DeltaTree.read(spark, DeltaTree.parts(layoutDir): _*))
       .select(col("mention_id"), col("mention"), col("matched_id"),
         col("dist"), col("correct"))
 
@@ -1233,14 +1017,6 @@ object EventStreams {
       .write.mode("overwrite").parquet(s"$layoutDir/b$batchId")
   }
 
-  /** Existing generation ids of one kind under a delta tree — the
-    * monotonicity evidence [[applyCatalogDelta]]'s guard reads.
-    */
-  private def genIds(dir: String, prefix: String): Seq[Long] =
-    subDirs(dir).map(_.getFileName.toString)
-      .filter(_.matches(prefix + "\\d+"))
-      .map(_.drop(prefix.length).toLong)
-
   /** Apply a CATALOG DELTA — upserted `(ent_id, ent_name)` rows and/or
     * tombstoned `(ent_id, deleted = true)` rows — to the evolving
     * store pair: land the delta as catalog generation `deltaId+1`
@@ -1268,16 +1044,14 @@ object EventStreams {
   def applyCatalogDelta(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, catalogDir: String, layoutDir: String,
       deltaId: Long): Unit = {
-    val existing = genIds(catalogDir, "b") ++ genIds(layoutDir, "cd")
-    require(existing.isEmpty || deltaId >= existing.max,
-      s"catalog deltaId $deltaId is below the already-applied generation " +
-        s"${existing.max} — deltaIds order re-verdict generations across " +
-        "the store pair's life and must be monotonically increasing " +
-        "(equal to the newest = exact replay of that delta; lower would " +
-        "let stale re-verdicts outrank newer ones in the latest-gen-wins " +
-        "fold and resurrect replaced or tombstoned catalog rows)")
-    val oldCat = foldCatalog(readParts(spark,
-      labelStoreParts(catalogDir, excludeBatch = deltaId)))
+    DeltaTree.requireMonotonic("catalog deltaId", deltaId,
+      DeltaTree.ids(catalogDir, "b") ++ DeltaTree.ids(layoutDir, "cd"),
+      "deltaIds order re-verdict generations across the store pair's " +
+        "life; a lower one would let stale re-verdicts outrank newer ones " +
+        "in the latest-gen-wins fold and resurrect replaced or tombstoned " +
+        "catalog rows")
+    val oldCat = foldCatalog(DeltaTree.read(spark,
+      DeltaTree.parts(catalogDir, exclude = _ == s"b$deltaId"): _*))
       .localCheckpoint()
     val d = graft.operators.EntityResolution.withDeletedCol(delta)
       .select(col("ent_id"),
@@ -1323,10 +1097,8 @@ object EventStreams {
     // dirs makes this a pure map-side scan — a dropDuplicates over
     // the full tree would shuffle the corpus-sized store on every
     // catalog delta (caught in the r14 self-review).
-    val mentionParts = matchesStoreParts(layoutDir)
-      .filterNot(p => java.nio.file.Paths.get(p)
-        .getFileName.toString.startsWith("cd"))
-    val stored = readParts(spark, mentionParts)
+    val stored = DeltaTree.read(spark,
+        DeltaTree.parts(layoutDir, exclude = _.startsWith("cd")): _*)
       .select(col("mention_id"), col("true_name"), col("mention"))
     // the dangler face: ANY generation's verdict pointing at a CHANGED
     // entity — deleted or renamed — marks its mention affected (a
@@ -1365,7 +1137,8 @@ object EventStreams {
   private[graft] def danglingMentions(spark: org.apache.spark.sql.SparkSession,
       layoutDir: String, refIds: DataFrame, excludeCd: Long): DataFrame = {
     val ids = refIds.select(col("ent_id"))
-    readParts(spark, matchesStoreParts(layoutDir, excludeCd))
+    DeltaTree.read(spark,
+      DeltaTree.parts(layoutDir, exclude = _ == s"cd$excludeCd"): _*)
       .join(broadcast(ids), col("matched_id") === ids("ent_id"), "left_semi")
       .select(col("mention_id")).distinct()
   }
@@ -1413,31 +1186,17 @@ object EventStreams {
   def erasureAuditStores(spark: org.apache.spark.sql.SparkSession,
       catalogDir: String, layoutDir: String, entIds: DataFrame,
       entNames: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
     // deletion-request-sized collects (the bounded-collect class every
     // probe here uses)
     val ids = entIds.select(col("ent_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val names = entNames.map(_.select(col("ent_name")).distinct()
       .collect().map(_.getString(0)).toSeq)
-    def inIds(c: org.apache.spark.sql.Column) =
-      if (ids.isEmpty) lit(false) else c.isInCollection(ids)
-    val nCat = spark.read.option("recursiveFileLookup", "true")
-      .parquet(catalogDir)
-      .agg(count(when(inIds(col("ent_id")), lit(1)))).head().getLong(0)
-    val matchesRaw = spark.read
-      .option("recursiveFileLookup", "true").parquet(layoutDir)
-    val matchAggs = count(when(inIds(col("matched_id")), lit(1))) +:
-      names.toSeq.map { ns =>
-        def inNames(c: org.apache.spark.sql.Column) =
-          if (ns.isEmpty) lit(false) else c.isInCollection(ns)
-        count(when(inNames(col("true_name")) || inNames(col("mention")),
-          lit(1)))
-      }
-    val matchRow = matchesRaw.agg(matchAggs.head, matchAggs.tail: _*).head()
-    val payload = names.map(_ => "matches_payload" -> matchRow.getLong(1))
-    (Seq(("catalog", nCat), ("matches", matchRow.getLong(0))) ++ payload)
-      .toDF("store", "n_raw_rows_referencing")
+    val payload = names.map(ns => ("matches_payload", layoutDir,
+      among(col("true_name"), ns) || among(col("mention"), ns)))
+    DeltaTree.erasureAudit(spark,
+      Seq(("catalog", catalogDir, among(col("ent_id"), ids)),
+        ("matches", layoutDir, among(col("matched_id"), ids))) ++ payload: _*)
   }
 
   /** Compact the evolving matches store: fold base + mention deltas +
@@ -1465,10 +1224,10 @@ object EventStreams {
   def compactMatchesStore(spark: org.apache.spark.sql.SparkSession,
       layoutDir: String, maxDeltas: Int = 8, files: Int = 4,
       quiesced: Boolean = false): Boolean =
-    compactDeltaTree(layoutDir, maxDeltas, includeFenced = quiesced) {
+    DeltaTree.compact(layoutDir, maxDeltas, includeFenced = quiesced) {
       (tmp, parts) =>
         // gen is PRESERVED (not reset): see foldMatchesStore
-        foldMatchesStore(readParts(spark, parts))
+        foldMatchesStore(DeltaTree.read(spark, parts: _*))
           .repartitionByRange(files, col("mention_id"))
           .sortWithinPartitions(col("mention_id"))
           .write.mode("overwrite").parquet(tmp)
@@ -1549,7 +1308,7 @@ object EventStreams {
       maxBucket: Int = graft.operators.Dedup.MaxBandBucket,
       threshold: Double = graft.operators.Dedup.ClusterThreshold): Unit = {
     val spark = batch.sparkSession
-    val batchTombIds = tombstoneDocIds(spark, root)
+    val batchTombIds = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")
     // the takedown ledger gates the INGEST boundary too: a taken-down
     // id never re-enters — neither through a replayed batch that
     // predates its takedown (whose raw rows would otherwise re-land
@@ -1573,8 +1332,7 @@ object EventStreams {
     bands.write.mode("overwrite").parquet(s"$root/bands/b$batchId")
     // tombstone-aware probe: a new ingest never pairs against a
     // taken-down doc's band rows (and the cap sees surviving sizes)
-    val storeBands = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/bands")
+    val storeBands = DeltaTree.read(spark, s"$root/bands")
       .filter(notTombstoned(col("doc_id"), batchTombIds))
     val edges = graft.operators.Dedup.lshProbeEdges(storeBands, bands,
       threshold = threshold, maxBucket = maxBucket)
@@ -1622,7 +1380,7 @@ object EventStreams {
       batchId: Long,
       threshold: Double = graft.operators.Dedup.EmbeddingCosineThreshold): Unit = {
     val spark = batch.sparkSession
-    val batchTombIds = tombstoneIds(spark, root, "vec_id")
+    val batchTombIds = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "vec_id")
     // the ledger gates the ingest boundary (see applyCascadeBatch): a
     // taken-down id never re-enters, via replay or re-upload
     val vecs = graft.operators.Similarity.embWithBucketOf(
@@ -1633,8 +1391,7 @@ object EventStreams {
     vecs.write.mode("overwrite").parquet(s"$root/vecs/b$batchId")
     // tombstone-aware probe: a new ingest never pairs against a
     // taken-down vector's rows
-    val store = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/vecs")
+    val store = DeltaTree.read(spark, s"$root/vecs")
       .filter(notTombstoned(col("vec_id"), batchTombIds))
     val edges = graft.operators.Dedup.embProbeEdges(store, vecs, threshold)
     writeLabelDelta(edges, s"$root/labels", batchId)
@@ -1649,9 +1406,9 @@ object EventStreams {
     // takedown face: compaction physically erases tombstoned vector
     // rows (same fence caveat as the cascade trees — the newest delta
     // stays raw until unfenced)
-    val tombIds = tombstoneIds(spark, root, "vec_id")
-    val vecs = compactDeltaTree(s"$root/vecs", maxDeltas) { (tmp, parts) =>
-      readParts(spark, parts)
+    val tombIds = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "vec_id")
+    val vecs = DeltaTree.compact(s"$root/vecs", maxDeltas) { (tmp, parts) =>
+      DeltaTree.read(spark, parts: _*)
         .filter(notTombstoned(col("vec_id"), tombIds))
         .repartitionByRange(files, col("bucket"))
         .sortWithinPartitions(col("bucket"))
@@ -1680,19 +1437,10 @@ object EventStreams {
       files: Int = 4): Unit = {
     import spark.implicits._
     require(vecIds.nonEmpty, "a takedown names at least one vec_id")
-    val tombDir = s"$root/_tombstones"
-    val existing = genIds(tombDir, "t")
-    require(existing.isEmpty || tombId >= existing.max,
-      s"takedown tombId $tombId is below the already-applied generation " +
-        s"${existing.max} — tombIds must be monotonically increasing " +
-        "(equal to the newest = exact replay of that takedown); a reused " +
-        "lower id would overwrite an earlier takedown's ledger generation " +
-        "and silently resurrect its vectors")
-    vecIds.toDF("vec_id").write.mode("overwrite").parquet(s"$tombDir/t$tombId")
-    val tombs = tombstoneIds(spark, root, "vec_id")
+    DeltaTree.appendLedger(tombId, DeltaTree.ledgerOf(root))(vecIds.toDF("vec_id"))
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "vec_id")
     repairLabelTree(spark, s"$root/labels", vecIds, tombs, maxHops, files) { survivors =>
-      val vecsF = spark.read
-        .option("recursiveFileLookup", "true").parquet(s"$root/vecs")
+      val vecsF = DeltaTree.read(spark, s"$root/vecs")
         .filter(notTombstoned(col("vec_id"), tombs))
       val survivorRows = vecsF.join(
         broadcast(survivors.withColumnRenamed("doc_id", "vec_id")),
@@ -1704,32 +1452,21 @@ object EventStreams {
   /** STORE-SIDE takedown audit for an embedding-cluster tree —
     * [[erasureAuditCascade]]'s twin: raw rows under `vecs/` still
     * carrying a taken-down id, label rows naming it (as member or as
-    * cluster name), and the permanent ledger row. One
-    * conditional-aggregation scan per sub-store.
+    * cluster name), and the permanent ledger row
+    * ([[DeltaTree.erasureAudit]]).
     */
   def erasureAuditEmbedding(spark: org.apache.spark.sql.SparkSession,
-      root: String, vecIds: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    def inIds(c: Column) =
-      if (vecIds.isEmpty) lit(false) else c.isInCollection(vecIds)
-    def cnt(df: DataFrame, cond: Column) =
-      df.agg(count(when(cond, lit(1)))).head().getLong(0)
-    def raw(sub: String) = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/$sub")
-    val ledger =
-      if (subDirs(s"$root/_tombstones").isEmpty) 0L
-      else cnt(raw("_tombstones"), inIds(col("vec_id")))
-    Seq(
-      ("vecs", cnt(raw("vecs"), inIds(col("vec_id")))),
-      ("labels", cnt(raw("labels"),
-        inIds(col("doc_id")) || inIds(col("cluster_id")))),
-      ("tombstone_record", ledger))
-      .toDF("store", "n_raw_rows_referencing")
-  }
+      root: String, vecIds: Seq[Long]): DataFrame =
+    DeltaTree.erasureAudit(spark,
+      ("vecs", s"$root/vecs", among(col("vec_id"), vecIds)),
+      ("labels", s"$root/labels",
+        among(col("doc_id"), vecIds) || among(col("cluster_id"), vecIds)),
+      ("tombstone_record", DeltaTree.ledgerOf(root),
+        among(col("vec_id"), vecIds)))
 
   private def readKeeperStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, keyCol: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(dir)
+    DeltaTree.read(spark, dir)
       .groupBy(col(keyCol)).agg(min(col("keeper")).as("keeper"))
 
   // ------------------------------------------------------------------
@@ -1737,58 +1474,6 @@ object EventStreams {
   // legal removals against the cascade serving stores — the symmetric
   // hole the r15 catalog tombstones left open)
   // ------------------------------------------------------------------
-
-  /** Cumulative takedown TOMBSTONES under a cascade store tree:
-    * `(doc_id, fp, nfp)` rows in `_tombstones/t<id>` generations (the
-    * `_` prefix keeps the ledger out of every recursive sub-store
-    * read). The content keys ride along because the keeper-election
-    * correction needs the AFFECTED fp/nfp keys for the store's whole
-    * life — after compaction physically erases the doc's rows, they
-    * are no longer derivable from `docs/`. That retention is an honest
-    * scope statement, not an oversight: an md5 fingerprint of deleted
-    * content persists in the deletion ledger (surfaced by
-    * [[erasureAuditCascade]]'s `tombstone_record` row), exactly like
-    * the ER catalog's tombstone generation retains the deleted
-    * `ent_id` until its compaction folds it — here the ledger is
-    * permanent because read-side keeper correction consults it.
-    */
-  private[graft] def cascadeTombstones(spark: org.apache.spark.sql.SparkSession,
-      root: String): DataFrame = {
-    import spark.implicits._
-    if (subDirs(s"$root/_tombstones").isEmpty)
-      Seq.empty[(Long, Option[String], Option[String])]
-        .toDF("doc_id", "fp", "nfp")
-    else spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$root/_tombstones")
-  }
-
-  /** The tombstoned ids under a store tree, collected — takedown
-    * requests are the bounded dimension-delta class (the same contract
-    * as [[erasureAuditStores]]' request list), so they push into
-    * codegen'd set-membership predicates on every corpus-sized read
-    * instead of joining. `idCol` is the tree's ledger key (`doc_id`
-    * for cascade trees, `vec_id` for embedding trees).
-    */
-  private def tombstoneIds(spark: org.apache.spark.sql.SparkSession,
-      root: String, idCol: String): Seq[Long] =
-    tombstoneIdsAt(spark, s"$root/_tombstones", idCol)
-
-  /** [[tombstoneIds]] with the ledger directory given explicitly — the
-    * standalone label store keeps its ledger in a sibling dir
-    * ([[labelLedgerDir]]), not under the tree root.
-    */
-  private def tombstoneIdsAt(spark: org.apache.spark.sql.SparkSession,
-      ledgerDir: String, idCol: String): Seq[Long] =
-    if (subDirs(ledgerDir).isEmpty) Seq.empty
-    else spark.read.option("recursiveFileLookup", "true")
-      .parquet(ledgerDir)
-      .select(col(idCol)).distinct().collect().map(_.getLong(0)).toSeq
-
-  private def tombstoneDocIds(spark: org.apache.spark.sql.SparkSession,
-      root: String): Seq[Long] = tombstoneIds(spark, root, "doc_id")
-
-  private def notTombstoned(c: Column, ids: Seq[Long]): Column =
-    if (ids.isEmpty) lit(true) else !c.isInCollection(ids)
 
   /** The COMPONENT-REPAIR core both takedown faces share: a removal
     * can split a near-dup component (the removed row was the only
@@ -1798,7 +1483,7 @@ object EventStreams {
     * their cluster ids, a removal-sized set), over survivor-probed
     * edges (`probeEdges`, the modality-specific seed-probe — LSH bands
     * for text, sign-buckets for embeddings), and swap the repaired
-    * tree in via [[replaceLabelTree]]. Graph work scales with the
+    * tree in via [[DeltaTree.rebuild]]. Graph work scales with the
     * affected components, never the corpus — the delete twin of
     * [[graft.operators.Dedup.clustersIncrementalDelta]]'s merge face.
     */
@@ -1827,6 +1512,15 @@ object EventStreams {
     replaceLabelTree(labelsDir, repaired, files)
   }
 
+  /** Swap `labels` in as the whole label tree at `labelsDir` — one
+    * gen-0 base through [[DeltaTree.rebuild]]'s staged swap; no delta
+    * is kept, the labels already absorb every one.
+    */
+  private def replaceLabelTree(labelsDir: String, labels: DataFrame,
+      files: Int): Unit =
+    DeltaTree.rebuild(labelsDir, fenced = false)(
+      (tmp, _) => writeLabelBase(labels, tmp, files))
+
   /** TAKE DOWN documents from a maintained cascade store tree — the
     * corpus-side delete face: a production training-data pipeline
     * receives opt-outs and legal removals, and a taken-down doc must
@@ -1839,9 +1533,17 @@ object EventStreams {
     * What lands where:
     *  1. the doc ids + their content keys (captured from `docs/`
     *     BEFORE any physical erasure can drop them) land as a
-    *     `_tombstones/t<tombId>` generation — `tombId`s are monotonic
-    *     (equal to the newest = exact replay, which overwrites the
-    *     same directory idempotently);
+    *     `(doc_id, fp, nfp)` ledger generation
+    *     ([[DeltaTree.appendLedger]]) — `tombId`s are monotonic (equal
+    *     to the newest = exact replay, which overwrites the same
+    *     directory idempotently). The content keys ride along because
+    *     the keeper-election correction needs the AFFECTED fp/nfp keys
+    *     for the store's whole life — after compaction physically
+    *     erases the doc's rows, they are no longer derivable from
+    *     `docs/`. So an md5 fingerprint of deleted content persists in
+    *     the permanent ledger (surfaced by [[erasureAuditCascade]]'s
+    *     `tombstone_record` row), as the ER catalog's tombstone
+    *     generation retains the deleted `ent_id` until compaction;
     *  2. every read becomes tombstone-aware (docs/bands scans filter,
     *     keeper folds re-elect — see [[readCascadeVerdicts]]), so the
     *     doc vanishes from serving and from future batch probes
@@ -1855,7 +1557,7 @@ object EventStreams {
     *     those containing a taken-down doc) are re-clustered from the
     *     surviving band rows under batch semantics (caps evaluated on
     *     SURVIVING bucket sizes) and the label tree is swapped via
-    *     [[replaceLabelTree]]'s staged no-data-loss move. Graph work
+    *     [[DeltaTree.rebuild]]'s staged no-data-loss swap. Graph work
     *     scales with the affected components, never the corpus — the
     *     delete twin of [[graft.operators.Dedup.clustersIncrementalDelta]]'s
     *     merge face.
@@ -1892,43 +1594,35 @@ object EventStreams {
       files: Int = 4): DataFrame = {
     import spark.implicits._
     require(docIds.nonEmpty, "a takedown names at least one doc_id")
-    val tombDir = s"$root/_tombstones"
-    val existing = genIds(tombDir, "t")
-    require(existing.isEmpty || tombId >= existing.max,
-      s"takedown tombId $tombId is below the already-applied generation " +
-        s"${existing.max} — tombIds must be monotonically increasing " +
-        "(equal to the newest = exact replay of that takedown); a reused " +
-        "lower id would overwrite an earlier takedown's ledger generation " +
-        "and silently resurrect its docs")
-    // 1. capture the content keys while docs/ still holds them — a
-    // broadcast-semi MAP-SIDE scan of the corpus-sized store (a left
-    // join with the store on the right could not broadcast and would
-    // shuffle the corpus per takedown); ids the store never saw get
-    // keyless ledger rows via the anti-join over the captured few
-    val docsRaw = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/docs")
-    val ids = docIds.toDF("doc_id")
-    val captured = docsRaw.select(col("doc_id"), col("fp"), col("nfp"))
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      // a doc can sit twice in the tree (replay-fenced delta + folded
-      // base hold identical rows) — the ledger keeps one
-      .dropDuplicates("doc_id")
-      .localCheckpoint()
-    val missing = ids
-      .join(captured.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .withColumn("fp", lit(null).cast("string"))
-      .withColumn("nfp", lit(null).cast("string"))
-    captured.unionByName(missing)
-      .write.mode("overwrite").parquet(s"$tombDir/t$tombId")
-    val tombs = tombstoneDocIds(spark, root) // cumulative, incl. this gen
+    DeltaTree.appendLedger(tombId, DeltaTree.ledgerOf(root)) {
+      // 1. capture the content keys while docs/ still holds them — a
+      // broadcast-semi MAP-SIDE scan of the corpus-sized store (a left
+      // join with the store on the right could not broadcast and would
+      // shuffle the corpus per takedown); ids the store never saw get
+      // keyless ledger rows via the anti-join over the captured few
+      val ids = docIds.toDF("doc_id")
+      val captured = DeltaTree.read(spark, s"$root/docs")
+        .select(col("doc_id"), col("fp"), col("nfp"))
+        .join(broadcast(ids), Seq("doc_id"), "left_semi")
+        // a doc can sit twice in the tree (replay-fenced delta + folded
+        // base hold identical rows) — the ledger keeps one
+        .dropDuplicates("doc_id")
+        .localCheckpoint()
+      val missing = ids
+        .join(captured.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .withColumn("fp", lit(null).cast("string"))
+        .withColumn("nfp", lit(null).cast("string"))
+      captured.unionByName(missing)
+    }
+    // cumulative, incl. this gen
+    val tombs = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")
     // 3. label repair: re-cluster ONLY the components a tombstoned doc
     // touches, over the surviving band rows under batch cap semantics
     // — the survivors' own band rows probe the filtered store, the
     // same map-side seed-probe shape as the streamed ingest, with the
     // affected components as the "batch"
     repairLabelTree(spark, s"$root/labels", docIds, tombs, maxHops, files) { survivors =>
-      val bandsF = spark.read
-        .option("recursiveFileLookup", "true").parquet(s"$root/bands")
+      val bandsF = DeltaTree.read(spark, s"$root/bands")
         .filter(notTombstoned(col("doc_id"), tombs))
       val survivorRows = bandsF.join(broadcast(survivors), Seq("doc_id"))
       graft.operators.Dedup.lshProbeEdges(
@@ -1936,8 +1630,7 @@ object EventStreams {
     }
     // cap-uncross report (see scaladoc) — sized on the tombstoned
     // docs' own buckets, the only ones a takedown can shrink
-    val bandsAll = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/bands")
+    val bandsAll = DeltaTree.read(spark, s"$root/bands")
     val dKeys = bandsAll.filter(col("doc_id").isInCollection(docIds))
       .select(col("band"), col("band_key")).distinct()
     val uncrossed = bandsAll.join(broadcast(dKeys), Seq("band", "band_key"))
@@ -1984,16 +1677,15 @@ object EventStreams {
 
   private def affectedKeeperKeys(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String): Seq[String] =
-    if (subDirs(s"$root/_tombstones").isEmpty) Seq.empty
-    else cascadeTombstones(spark, root)
-      .select(col(keyCol)).filter(col(keyCol).isNotNull)
-      .distinct().collect().map(_.getString(0)).toSeq
+    DeltaTree.ledger(spark, DeltaTree.ledgerOf(root)).fold(Seq.empty[String])(
+      _.select(col(keyCol)).filter(col(keyCol).isNotNull)
+        .distinct().collect().map(_.getString(0)).toSeq)
 
   private def reelectKeepers(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String, affKeys: Seq[String]): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(s"$root/docs")
-      .filter(col(keyCol).isInCollection(affKeys) &&
-        notTombstoned(col("doc_id"), tombstoneDocIds(spark, root)))
+    DeltaTree.read(spark, s"$root/docs")
+      .filter(col(keyCol).isInCollection(affKeys) && notTombstoned(col("doc_id"),
+        DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")))
       .groupBy(col(keyCol)).agg(min(col("doc_id")).as("keeper"))
 
   /** STORE-SIDE takedown audit — [[erasureAuditStores]]' corpus twin:
@@ -2005,31 +1697,22 @@ object EventStreams {
     * docs' cluster_id — the repair face [[takedownCascadeDocs]]
     * closes). The `tombstone_record` row surfaces the deletion
     * ledger's own rows (doc ids + content-key md5s, retained
-    * permanently for keeper correction — see [[cascadeTombstones]]):
+    * permanently for keeper correction — see [[takedownCascadeDocs]]):
     * the sign-off for the CONTENT stores is the other five rows at
     * zero, reached after a takedown + post-takedown ingest (unfencing
-    * the pre-takedown deltas) + [[compactCascadeStores]] cycle. One
-    * conditional-aggregation scan per sub-store; nothing shuffles.
+    * the pre-takedown deltas) + [[compactCascadeStores]] cycle
+    * ([[DeltaTree.erasureAudit]]: one scan per sub-store).
     */
   def erasureAuditCascade(spark: org.apache.spark.sql.SparkSession,
       root: String, docIds: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    def raw(sub: String) = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/$sub")
-    def inIds(c: Column) =
-      if (docIds.isEmpty) lit(false) else c.isInCollection(docIds)
-    def cnt(df: DataFrame, cond: Column) =
-      df.agg(count(when(cond, lit(1)))).head().getLong(0)
-    Seq(
-      ("docs", cnt(raw("docs"), inIds(col("doc_id")))),
-      ("bands", cnt(raw("bands"), inIds(col("doc_id")))),
-      ("fp_keepers", cnt(raw("fp"), inIds(col("keeper")))),
-      ("nfp_keepers", cnt(raw("nfp"), inIds(col("keeper")))),
-      ("labels", cnt(raw("labels"),
-        inIds(col("doc_id")) || inIds(col("cluster_id")))),
-      ("tombstone_record", cnt(cascadeTombstones(spark, root),
-        inIds(col("doc_id")))))
-      .toDF("store", "n_raw_rows_referencing")
+    def ids(c: String) = among(col(c), docIds)
+    DeltaTree.erasureAudit(spark,
+      ("docs", s"$root/docs", ids("doc_id")),
+      ("bands", s"$root/bands", ids("doc_id")),
+      ("fp_keepers", s"$root/fp", ids("keeper")),
+      ("nfp_keepers", s"$root/nfp", ids("keeper")),
+      ("labels", s"$root/labels", ids("doc_id") || ids("cluster_id")),
+      ("tombstone_record", DeltaTree.ledgerOf(root), ids("doc_id")))
   }
 
   /** Serve the cascade attribution table off the maintained stores —
@@ -2049,9 +1732,8 @@ object EventStreams {
     // winners, labels defensively filtered (the repair swap already
     // dropped them physically; the filter covers a crash between a
     // takedown's ledger write and its label swap)
-    val tombIds = tombstoneDocIds(spark, root)
-    val corpus = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/docs")
+    val tombIds = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")
+    val corpus = DeltaTree.read(spark, s"$root/docs")
       .filter(notTombstoned(col("doc_id"), tombIds))
     val ex = correctedKeeperStore(spark, root, "fp", "fp")
       .withColumnRenamed("keeper", "ek")
@@ -2080,12 +1762,12 @@ object EventStreams {
   def saturatedBandBuckets(spark: org.apache.spark.sql.SparkSession,
       root: String,
       maxBucket: Int = graft.operators.Dedup.MaxBandBucket): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$root/bands")
+    DeltaTree.read(spark, s"$root/bands")
       // tombstone-aware: the divergence contract compares against a
       // batch recompute over SURVIVING docs, whose caps see surviving
       // bucket sizes
-      .filter(notTombstoned(col("doc_id"), tombstoneDocIds(spark, root)))
+      .filter(notTombstoned(col("doc_id"),
+        DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")))
       .groupBy(col("band"), col("band_key"))
       .agg(count(lit(1)).as("bn"))
       .filter(col("bn") > maxBucket)
@@ -2099,12 +1781,10 @@ object EventStreams {
     * under-cap edges its earlier ingests emitted may have merged
     * components; nothing repairs that incrementally). The other four
     * sub-stores never diverge (disjoint appends; `min` keeper folds
-    * compose), so only `labels/` is rebuilt — staged: the new base is
-    * written to a sibling, the old tree moves to trash, the rebuild
-    * moves in, trash drops. An interruption before the swap leaves the
-    * old labels servable; one mid-swap is repaired by re-running (no
-    * point in the sequence has zero on-disk copies — see the swap
-    * comment below).
+    * compose), so only `labels/` is rebuilt, through
+    * [[DeltaTree.rebuild]]'s staged swap: an interruption before the
+    * swap leaves the old labels servable, and one mid-swap is finished
+    * or undone by the next swap of the tree.
     *
     * Single-maintainer contract like every store verb here: run
     * between batches (the nightly window, stream stopped or idle). A
@@ -2119,47 +1799,16 @@ object EventStreams {
     // tombstone-aware like every cascade read: taken-down docs are out
     // of the rebuilt node set and out of every bucket (so the caps the
     // batch semantics evaluate are the SURVIVING bucket sizes)
-    val tombIds = tombstoneDocIds(spark, root)
-    val bands = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/bands")
+    val tombIds = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")
+    val bands = DeltaTree.read(spark, s"$root/bands")
       .filter(notTombstoned(col("doc_id"), tombIds))
     val edges = graft.operators.Dedup.lshEdgesOverBands(bands,
       maxBucket = maxBucket)
-    val nodes = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$root/docs")
+    val nodes = DeltaTree.read(spark, s"$root/docs")
       .select(col("doc_id"))
       .filter(notTombstoned(col("doc_id"), tombIds))
     val labels = graft.operators.Dedup.clustersOver(nodes, edges, maxHops)
     replaceLabelTree(s"$root/labels", labels, files)
-  }
-
-  /** The staged no-data-loss REPLACEMENT of a cascade tree's `labels/`
-    * sub-store — [[rebuildCascadeStores]]' swap tail, shared with the
-    * takedown face's label repair. Interruption-repairable at every
-    * point (r15 review: the first draft cleared trash BEFORE checking
-    * labels existed, so a crash between the two moves left a retry
-    * that destroyed the only old copy and then wedged on the move):
-    * the old tree moves to trash ONLY when it exists — after a
-    * mid-swap crash the re-run finds labels/ absent, skips straight to
-    * moving the fresh rebuild in, and the stale trash drops at the
-    * end. At no point do zero copies exist: the only window without
-    * labels/ has both the old copy (trash) and the new one (tmp) on
-    * disk.
-    */
-  private def replaceLabelTree(labelsDir: String, labels: DataFrame,
-      files: Int): Unit = {
-    import java.nio.file.{Files, Paths}
-    val tmp = s"$labelsDir.rebuilding"
-    deleteRecursively(Paths.get(tmp))
-    labelStoreInit(labels, tmp, files)
-    val labelsPath = Paths.get(labelsDir)
-    val trash = Paths.get(s"$labelsDir.trash")
-    if (Files.isDirectory(labelsPath)) {
-      deleteRecursively(trash)
-      Files.move(labelsPath, trash)
-    }
-    Files.move(Paths.get(tmp), labelsPath)
-    deleteRecursively(trash)
   }
 
   /** Compact every cascade sub-store that is due: pure rewrites for
@@ -2183,18 +1832,18 @@ object EventStreams {
     // replay-fenced newest delta of each sub-store stay raw until a
     // newer batch unfences them — the same honest fence caveat as the
     // ER stores; [[erasureAuditCascade]] reads the truth either way.
-    val tombIds = tombstoneDocIds(spark, root)
+    val tombIds = DeltaTree.ledgerIds(spark, DeltaTree.ledgerOf(root), "doc_id")
     def rewrite(sub: String, rangeCol: String): Boolean =
-      compactDeltaTree(s"$root/$sub", maxDeltas) { (tmp, parts) =>
-        readParts(spark, parts)
+      DeltaTree.compact(s"$root/$sub", maxDeltas) { (tmp, parts) =>
+        DeltaTree.read(spark, parts: _*)
           .filter(notTombstoned(col("doc_id"), tombIds))
           .repartitionByRange(files, col(rangeCol))
           .sortWithinPartitions(col(rangeCol))
           .write.mode("overwrite").parquet(tmp)
       }
     def foldKeepers(sub: String, keyCol: String): Boolean =
-      compactDeltaTree(s"$root/$sub", maxDeltas) { (tmp, parts) =>
-        val folded = readParts(spark, parts)
+      DeltaTree.compact(s"$root/$sub", maxDeltas) { (tmp, parts) =>
+        val folded = DeltaTree.read(spark, parts: _*)
           .groupBy(col(keyCol)).agg(min(col("keeper")).as("keeper"))
         val affKeys = affectedKeeperKeys(spark, root, keyCol)
         val corrected =
@@ -2253,16 +1902,6 @@ object EventStreams {
     try f finally prior match {
       case Some(p) => spark.conf.set(StateStoreProviderKey, p)
       case None => spark.conf.unset(StateStoreProviderKey)
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally s.close()
     }
   }
 
@@ -2409,14 +2048,13 @@ object EventStreams {
       .withColumn("has_pii",
         col("n_emails") + col("n_ips") + col("n_phones") > 0)
 
-  /** Streaming OHLC candles — the streaming twin of
-    * `TimeSeries.ohlcHourly`: watermarked tumbling-hour windows per
-    * event type, open/close elected by `min_by`/`max_by` over the same
-    * zero-padded (micros, event_id) key as the batch form, so a
-    * backfill through the batch operator and the live stream produce
-    * IDENTICAL candles (the tie-at-same-timestamp case included —
-    * spec-pinned). State per open window is one candle row, evicted at
-    * watermark expiry.
+  /** Streaming OHLC candles: watermarked tumbling-hour windows per
+    * event type, open/close elected by `min_by`/`max_by` over a
+    * zero-padded (micros, event_id) key, so simultaneous events elect
+    * deterministically (spec-pinned). `TimeSeries.ohlcHourly` is this
+    * function over the bounded table, so a backfill and the live
+    * stream produce IDENTICAL candles. State per open window is one
+    * candle row, evicted at watermark expiry.
     */
   def ohlcCandles(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events
@@ -2482,19 +2120,6 @@ object EventStreams {
       .agg(count(lit(1)).as("vote_count"))
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
         col("candidate_id"), col("candidate_name"), col("party"), col("vote_count"))
-
-  /** Sliding-window variant (report §3.3 names both tumbling and
-    * sliding intervals). Carries only candidate_id — the
-    * `s_sliding_hourly` oracle contract — unlike the tumbling twin's
-    * denormalized name/party columns.
-    */
-  def votesPerCandidateSliding(votes: DataFrame, watermark: String = "10 minutes",
-      window_ : String = "1 hour", slide: String = "30 minutes"): DataFrame =
-    votesWatermarked(votes, watermark)
-      .groupBy(window(col("voted_at"), window_, slide), col("candidate_id"))
-      .agg(count(lit(1)).as("vote_count"))
-      .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("candidate_id"), col("vote_count"))
 
   /** `aggregated_turnout_by_location`: stream-static join against the
     * voter dimension (the vote message carries no address), then a

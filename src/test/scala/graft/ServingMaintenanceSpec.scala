@@ -900,6 +900,64 @@ class ServingMaintenanceSpec extends SparkSpec {
     assert(pre === expectedCascade(b0.unionByName(b1)))
   }
 
+  test("a compaction interrupted between trashing the folded generations and moving the new base in loses no rows") {
+    import spark.implicits._
+    import java.nio.file.Paths
+    def pairs(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, i + 1000L, 1L)).toDF("doc_a", "doc_b", "n_shared_spans")
+    def served(d: String) = EventStreams.readSpanLayoutDeltas(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    // built on disk, no fault injection: base_0, b0 and b1 are folded
+    // into a committed `<dir>.compacting` base and moved into
+    // `<dir>.trash`; the tree keeps only the replay-fenced b2. With
+    // `markComplete` the trash also carries the marker the swap leaves
+    // once every folded generation is in it.
+    def crashed(markComplete: Boolean): (String, Seq[(Long, Long, Long)]) = {
+      val d = Files.createTempDirectory("graft-swapcrash").toString + "/layout"
+      Seq("base_0" -> (0 until 10), "b0" -> (10 until 20), "b1" -> (20 until 30),
+        "b2" -> (30 until 40)).foreach { case (g, ids) => pairs(ids).write.parquet(s"$d/$g") }
+      val pre = served(d)
+      val folded = Seq("base_0", "b0", "b1")
+      spark.read.parquet(folded.map(g => s"$d/$g"): _*).write.parquet(s"$d.compacting")
+      Files.createDirectories(Paths.get(s"$d.trash"))
+      folded.foreach(g => Files.move(Paths.get(s"$d/$g"), Paths.get(s"$d.trash/$g")))
+      if (markComplete) Files.createFile(Paths.get(s"$d.trash/_COMPLETE"))
+      assert(served(d) === pre.filter(_._1 >= 30), "readers see only the fenced delta")
+      (d, pre)
+    }
+    for (markComplete <- Seq(false, true)) {
+      val (d, pre) = crashed(markComplete)
+      // a compaction call recovers the tree before it counts deltas,
+      // whether or not it then triggers
+      assert(!EventStreams.compactSpanLayout(spark, d, maxDeltas = 100))
+      assert(served(d) === pre, s"recovered rows (complete trash: $markComplete)")
+      assert(!Files.exists(Paths.get(s"$d.trash")) &&
+        !Files.exists(Paths.get(s"$d.compacting")))
+      pairs(40 until 50).write.parquet(s"$d/b3")
+      assert(EventStreams.compactSpanLayout(spark, d, maxDeltas = 2))
+      assert(gens(d) === 2)
+      assert(served(d) === (pre ++ served(s"$d/b3")).sorted,
+        s"rows after the next compaction (complete trash: $markComplete)")
+    }
+  }
+
+  test("only DeltaTree.scala knows the delta trees' directory format") {
+    import java.nio.file.Paths
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources = try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally walk.close()
+    val needles = Seq("recursiveFileLookup", ".trash", ".compacting",
+      "monotonically increasing")
+    // a generation-name regex: base(_N)?, bN, cdN or tN, in a string or
+    // triple-quoted literal
+    val generationRegex = """(?<![\\\w])(?:base|b|cd|t)[(_)|]*\\{1,2}d\+""".r
+    val hits = sources.filter { f =>
+      val src = Files.readString(f)
+      needles.exists(src.contains) || generationRegex.findFirstIn(src).isDefined
+    }.map(_.toString).sorted
+    assert(hits === Seq("src/main/scala/graft/streaming/DeltaTree.scala"))
+  }
+
   test("a band bucket crossing MaxBandBucket mid-stream is flagged at compaction") {
     import spark.implicits._
     // identical text → identical minhash signature → one shared set of
