@@ -302,9 +302,6 @@ object Similarity {
       modelKey = Some(s"ivf $dir $numCentroids $iters"))
   }
 
-  /** [[ivfTopK]] over ANY (id, array<double>) frame (spec seam and
-    * media-feature path, mirroring [[cosineTopKOver]]).
-    */
   /** Train + assign: the quantized/cached corpus frame, the trained
     * centroid vectors, and the `(vec_id, emb, nrm, cent_id)`
     * assignment — the IVF steps [[ivfTopKOver]] (probe search) and
@@ -424,6 +421,9 @@ object Similarity {
       .orderBy($"cent_id")
   }
 
+  /** [[ivfTopK]] over ANY (id, array<double>) frame (spec seam and
+    * media-feature path, mirroring [[cosineTopKOver]]).
+    */
   def ivfTopKOver(e0: DataFrame, idCol: String, embCol: String,
       numCentroids: Int = IvfNumCentroids, nProbe: Int = IvfNProbe,
       iters: Int = IvfKmeansIters, numQueries: Int = NumQueries,

@@ -181,10 +181,14 @@ private[graft] object DeltaTree {
     *  - any other trash: the swap stopped while moving generations out
     *    (the tree may still hold some it had folded), so move the
     *    trash's generations back and drop the staged base.
-    * Readers between the crash and the recovery see a tree missing the
-    * trashed generations; the recovery restores the pre-crash rows.
+    * Compaction and rebuilds run it first, and so do the upsert
+    * stores' batch seams before they read the store they update (an
+    * upsert computed against a tree missing its trashed generations
+    * would land as a normal generation). Readers between the crash and
+    * the recovery see a tree missing the trashed generations; the
+    * recovery restores the pre-crash rows.
     */
-  private def recover(dir: String): Unit = {
+  def recover(dir: String): Unit = {
     val tmp = staging(dir)
     val bin = trash(dir)
     if (Files.isDirectory(bin) && Files.isDirectory(tmp)) {

@@ -602,7 +602,9 @@ object EventStreams {
     * shares, in exactly ONE place: fold the store EXCLUDING the
     * batch's own prior delta (the upsert replay rule), compute the
     * incremental delta for the batch's edges, land it as the
-    * `b<batchId>` generation.
+    * `b<batchId>` generation. A swap a crash interrupted is recovered
+    * first ([[DeltaTree.recover]]), so the delta is computed against
+    * the whole store.
     *
     * POISON-PILL seam (r14 ADVICE): a batch whose changed-component
     * mapping exceeds [[graft.operators.Dedup.DeltaPushdownMaxReps]] (a
@@ -626,6 +628,7 @@ object EventStreams {
     // resurrect it as a node or re-merge its repaired component. For
     // cascade/embedding trees (root-level ledger) this sibling ledger
     // is empty and their apply seams gate upstream.
+    DeltaTree.recover(labelDir)
     val ledgerIds = DeltaTree.ledgerIds(spark, labelLedgerDir(labelDir), "doc_id")
     val gated = edges.filter(notTombstoned(col("src"), ledgerIds) &&
       notTombstoned(col("dst"), ledgerIds))
@@ -1040,10 +1043,15 @@ object EventStreams {
     * order re-verdict generations in the latest-gen-wins folds) —
     * ENFORCED here: a deltaId below an already-landed generation
     * throws; equal to the newest is the exact-replay case and passes.
+    * Both trees first recover a swap a crash interrupted
+    * ([[DeltaTree.recover]]), so the delta is computed against the
+    * whole store pair.
     */
   def applyCatalogDelta(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, catalogDir: String, layoutDir: String,
       deltaId: Long): Unit = {
+    DeltaTree.recover(catalogDir)
+    DeltaTree.recover(layoutDir)
     DeltaTree.requireMonotonic("catalog deltaId", deltaId,
       DeltaTree.ids(catalogDir, "b") ++ DeltaTree.ids(layoutDir, "cd"),
       "deltaIds order re-verdict generations across the store pair's " +
@@ -2394,12 +2402,15 @@ object EventStreams {
     * `key`, newest `versionCol` wins. Exactly-once composes from the
     * checkpoint (batch replays re-merge idempotently).
     *
-    * Each micro-batch is materialized once: the batch frame re-runs its
-    * whole stateful plan on every action, so the emptiness check and
-    * the merge write would otherwise each execute the state-store stage.
-    * A data batch runs two jobs, the emptiness count and the merge
-    * write: the stored table is read with the batch's schema, not
-    * inferred.
+    * One Spark job per micro-batch: the batch frame re-runs its whole
+    * stateful plan on every action, so the merge write is its only
+    * action. The batch's row count is observed during that write; a
+    * batch with no rows (a watermark tick) discards its staged table
+    * and never swaps, so readers see no change. The stored table is
+    * read with the batch's schema, not inferred. The merge writes one
+    * file per `spark.sql.files.maxPartitionBytes` of the stored table
+    * (at least one), so the file count follows the table's size rather
+    * than the shuffle partition count.
     *
     * Reader contract: a concurrent `spark.read.parquet(path)` either
     * returns a complete committed table (some batch's merge result,
@@ -2416,72 +2427,85 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        // no-data micro-batches (watermark ticks) must not re-read and
-        // rewrite the whole table. NOTE: an if-guard, never `return` —
-        // a non-local return from a closure that outlives its enclosing
-        // method throws at batch time.
-        try if (batch.count() > 0) {
-          val spark = batch.sparkSession
-          import org.apache.hadoop.fs.Path
-          import org.apache.spark.sql.expressions.Window
-          val conf = spark.sparkContext.hadoopConfiguration
-          val dst = new Path(path)
-          // siblings derived from the NORMALIZED path — naive string
-          // concatenation on a trailing-slash path would nest __prev and
-          // __stage INSIDE dst and wedge the swap protocol forever
-          val prev = new Path(dst.getParent, dst.getName + "__prev")
-          val stage = new Path(dst.getParent, dst.getName + "__stage")
-          // resolve the filesystem FROM the target path (fs.defaultFS may
-          // be a different scheme than the sink location)
-          val fs = dst.getFileSystem(conf)
-          // recovery-aware read: prefer the live table; if a previous run
-          // crashed mid-swap, the last good table is at __prev. Absence
-          // is detected explicitly — a transient read error must FAIL the
-          // batch (checkpoint will retry), never silently empty the table.
-          val source =
-            if (fs.exists(dst)) Some(dst)
-            else if (fs.exists(prev)) Some(prev)
-            else None
-          // the table is only ever written from this query's batches,
-          // and the file source makes a read schema nullable, so the
-          // batch's schema is the table's; inferring it costs a job
-          val existing = source match {
-            case Some(p) => spark.read.schema(batch.schema).parquet(p.toString)
-            case None => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-          }
-          // a version TIE between the stored row and an update must
-          // resolve the same way in a batch and in its checkpoint
-          // replay, or recovery is not idempotent — break ties on a
-          // stable hash of the full row (arbitrary but deterministic)
-          val merged = existing.unionByName(batch)
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy(col(key))
-                .orderBy(col(versionCol).desc, xxhash64(struct(col("*"))))))
-            .filter(col("__rn") === 1)
-            .drop("__rn")
-          // Hadoop rename reports most failures by RETURNING FALSE, not
-          // throwing — an unchecked rename would let the checkpoint
-          // commit a batch whose output was silently abandoned in
-          // __stage. Throwing fails the batch so the checkpoint retries.
-          def mustRename(from: Path, to: Path): Unit =
-            require(fs.rename(from, to), s"rename $from -> $to failed")
-          // stage → swap: at every crash point either dst or __prev holds
-          // a complete table, so the recovery read above never loses
-          // data. __prev is only touched while a fresh dst exists to
-          // replace it — a recovery run (dst absent, __prev = last good)
-          // must NOT delete __prev before stage lands at dst, or a crash
-          // in between would silently reset the table to one batch.
-          fs.delete(stage, true)
-          merged.write.mode("overwrite").parquet(stage.toString)
+        val spark = batch.sparkSession
+        import org.apache.hadoop.fs.Path
+        import org.apache.spark.sql.Observation
+        import org.apache.spark.sql.expressions.Window
+        val conf = spark.sparkContext.hadoopConfiguration
+        val dst = new Path(path)
+        // siblings derived from the NORMALIZED path — naive string
+        // concatenation on a trailing-slash path would nest __prev and
+        // __stage INSIDE dst and wedge the swap protocol forever
+        val prev = new Path(dst.getParent, dst.getName + "__prev")
+        val stage = new Path(dst.getParent, dst.getName + "__stage")
+        // resolve the filesystem FROM the target path (fs.defaultFS may
+        // be a different scheme than the sink location)
+        val fs = dst.getFileSystem(conf)
+        // recovery-aware read: prefer the live table; if a previous run
+        // crashed mid-swap, the last good table is at __prev. Absence
+        // is detected explicitly — a transient read error must FAIL the
+        // batch (checkpoint will retry), never silently empty the table.
+        val source =
+          if (fs.exists(dst)) Some(dst)
+          else if (fs.exists(prev)) Some(prev)
+          else None
+        // the table is only ever written from this query's batches,
+        // and the file source makes a read schema nullable, so the
+        // batch's schema is the table's; inferring it costs a job
+        val existing = source match {
+          case Some(p) => spark.read.schema(batch.schema).parquet(p.toString)
+          case None => spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+        }
+        // one output file per maxPartitionBytes of the stored table:
+        // streams run with AQE off, so the window's exchange would
+        // otherwise write a file per shuffle partition, each a task
+        val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+        val tableBytes = source.fold(0L)(fs.getContentSummary(_).getLength)
+        val files = math.max(1L, (tableBytes + maxBytes - 1) / maxBytes).toInt
+        val rows = Observation()
+        // a version TIE between the stored row and an update must
+        // resolve the same way in a batch and in its checkpoint
+        // replay, or recovery is not idempotent — break ties on a
+        // stable hash of the full row (arbitrary but deterministic).
+        // Partitioning on the key already satisfies the window, so
+        // `files` reducers rank and write.
+        val merged = existing
+          .unionByName(batch.observe(rows, count(lit(1)).as("rows")))
+          .repartition(files, col(key))
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy(col(key))
+              .orderBy(col(versionCol).desc, xxhash64(struct(col("*"))))))
+          .filter(col("__rn") === 1)
+          .drop("__rn")
+        // Hadoop rename reports most failures by RETURNING FALSE, not
+        // throwing — an unchecked rename would let the checkpoint
+        // commit a batch whose output was silently abandoned in
+        // __stage. Throwing fails the batch so the checkpoint retries.
+        def mustRename(from: Path, to: Path): Unit =
+          require(fs.rename(from, to), s"rename $from -> $to failed")
+        fs.delete(stage, true)
+        merged.write.mode("overwrite").parquet(stage.toString)
+        // the write returned, so `get` only waits for the listener that
+        // delivers its metrics. They lack "rows" only when the
+        // optimizer removed the batch as provably empty. NOTE: an
+        // if-guard, never `return` — a non-local return from a closure
+        // that outlives its enclosing method throws at batch time.
+        if (rows.get.get("rows").exists(_ != 0L)) {
+          // stage → swap: at every crash point either dst or __prev
+          // holds a complete table, so the recovery read above never
+          // loses data. __prev is only touched while a fresh dst exists
+          // to replace it — a recovery run (dst absent, __prev = last
+          // good) must NOT delete __prev before stage lands at dst, or
+          // a crash in between would silently reset the table to one
+          // batch.
           if (fs.exists(dst)) {
             fs.delete(prev, true)
             mustRename(dst, prev)
           }
           mustRename(stage, dst)
           fs.delete(prev, true)
-        } finally batch.unpersist()
+        } else fs.delete(stage, true)
         ()
       }
       .start()

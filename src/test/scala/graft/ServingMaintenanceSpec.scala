@@ -941,6 +941,49 @@ class ServingMaintenanceSpec extends SparkSpec {
     }
   }
 
+  test("an upsert batch applied right after an interrupted compaction gives the uncrashed store") {
+    import spark.implicits._
+    import java.nio.file.Paths
+    def edges(es: (Long, Long)*): DataFrame = es.toDF("src", "dst")
+    // base: {1,2} {10,11} {20,21}; b0 joins {1,2,10,11}; b1 adds 40 to
+    // {20,21}; b2 is the replay-fenced {50,51}
+    val seed = edges((1L, 2L), (10L, 11L), (20L, 21L))
+    val batches = Seq(edges((2L, 10L)), edges((21L, 40L)), edges((50L, 51L)))
+    // the next batch joins a component that only the folded
+    // generations know to the fenced one's
+    val next = edges((11L, 50L))
+    def store(): String = {
+      val d = Files.createTempDirectory("graft-labelcrash").toString + "/labels"
+      val nodes = seed.select($"src".as("doc_id")).union(seed.select($"dst")).distinct()
+      EventStreams.labelStoreInit(
+        Dedup.clustersOver(nodes, seed, Dedup.MaintenanceMaxHops)
+          .select($"doc_id", $"cluster_id"), d)
+      batches.zipWithIndex.foreach { case (b, i) => EventStreams.applyLabelBatch(b, d, i.toLong) }
+      d
+    }
+    def labels(d: String) = labelRows(EventStreams.readLabelStore(spark, d))
+    val uncrashed = store()
+    EventStreams.applyLabelBatch(next, uncrashed, 3L)
+    val expected = labels(uncrashed)
+    assert(expected.map(_._2).distinct.size === 2, expected)
+    for (markComplete <- Seq(false, true)) {
+      // the compaction's crash state, built on disk as in the span
+      // layout case above: base_0, b0 and b1 folded into a committed
+      // `<dir>.compacting` base and moved into `<dir>.trash`
+      val d = store()
+      val folded = Seq("base_0", "b0", "b1")
+      spark.read.parquet(folded.map(g => s"$d/$g"): _*).write.parquet(s"$d.compacting")
+      Files.createDirectories(Paths.get(s"$d.trash"))
+      folded.foreach(g => Files.move(Paths.get(s"$d/$g"), Paths.get(s"$d.trash/$g")))
+      if (markComplete) Files.createFile(Paths.get(s"$d.trash/_COMPLETE"))
+      // no maintenance call: the batch seam recovers before it reads
+      EventStreams.applyLabelBatch(next, d, 3L)
+      assert(labels(d) === expected, s"complete trash: $markComplete")
+      assert(!Files.exists(Paths.get(s"$d.trash")) &&
+        !Files.exists(Paths.get(s"$d.compacting")))
+    }
+  }
+
   test("only DeltaTree.scala knows the delta trees' directory format") {
     import java.nio.file.Paths
     val walk = Files.walk(Paths.get("src/main"))

@@ -867,14 +867,140 @@ class StreamingSpec extends SparkSpec {
     assert(perBatch.values.forall(_ == partitions), perBatch)
   }
 
-  test("a data batch through foreachBatchUpsert runs two jobs: its count and its merge") {
+  test("a data batch through foreachBatchUpsert runs one job: its merge write") {
     val (counter, queryId, progress) = countedUpsert()
     val perBatch = counter.jobsByBatch(queryId)
     val dataBatches = progress.filter(_.numInputRows > 0).map(_.batchId)
     assert(dataBatches.size === 2)
-    // the second batch merges into the stored table: reading it with the
-    // batch's schema adds no schema-inference job
-    dataBatches.foreach(b => assert(perBatch.get(b) === Some(2), s"batch $b jobs $perBatch"))
+    // the row count is observed during the write, and the second batch
+    // reads the stored table with the batch's schema: no count job and
+    // no schema-inference job
+    dataBatches.foreach(b => assert(perBatch.get(b) === Some(1), s"batch $b jobs $perBatch"))
+  }
+
+  /** Regular files under `dir`, relative path -> modification time. */
+  private def fileTimes(dir: String): Map[String, java.nio.file.attribute.FileTime] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.getLastModifiedTime(p)).toMap
+    finally walk.close()
+  }
+
+  private def upsertSiblings(out: String): Seq[String] =
+    Seq("__stage", "__prev").map(out + _).filter(p => Files.exists(java.nio.file.Paths.get(p)))
+
+  test("a watermark-only batch through foreachBatchUpsert leaves the table untouched") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def msg(i: Int, hour: Int) = voteJson(s"t$i", s"v$i", s"c${i % 3}", s"Cand ${i % 3}",
+      s"P${i % 3}", f"2024-05-01 $hour%02d:${i % 60}%02d:00")
+    val out = Files.createTempDirectory("graft-upsert-tick").toString + "/rollup"
+    val stream = MemoryStream[String]
+    val agg = EventStreams.votesPerCandidate(EventStreams.parseVotes(stream.toDF()))
+      .withColumn("rollup_key", concat_ws("|", col("window_start"), col("candidate_id")))
+    val q = EventStreams.foreachBatchUpsert(agg, out,
+      key = "rollup_key", versionCol = "vote_count", checkpointDir = ckpt())
+    val progress = try {
+      stream.addData((0 until 20).map(msg(_, 10)))
+      q.processAllAvailable()
+      // the second data batch moves the watermark past hour 10, so a
+      // batch with no input evicts that window and emits no row
+      stream.addData((20 until 30).map(msg(_, 12)))
+      q.processAllAvailable()
+      q.recentProgress.toSeq
+    } finally q.stop()
+    val lastData = progress.filter(_.numInputRows > 0).map(_.batchId).max
+    val ticks = progress.filter(p => p.batchId > lastData && p.numInputRows == 0)
+    assert(ticks.nonEmpty, progress.map(p => (p.batchId, p.numInputRows)))
+    // every file of the table was last written before the first tick
+    // started: the tick neither rewrote nor swapped the table
+    val tickStart = java.time.Instant.parse(ticks.map(_.timestamp).min).toEpochMilli
+    val times = fileTimes(out)
+    assert(times.nonEmpty)
+    times.foreach { case (f, t) => assert(t.toMillis <= tickStart, s"$f written at $t") }
+    assert(upsertSiblings(out).isEmpty)
+    assert(spark.read.parquet(out).agg(sum("vote_count")).head().getLong(0) === 30L)
+  }
+
+  test("a first foreachBatchUpsert batch with no rows and no table completes without a table") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-upsert-empty").toString + "/table"
+    val stream = MemoryStream[(Int, Int)]
+    val q = EventStreams.foreachBatchUpsert(stream.toDF().toDF("k", "v").filter($"v" > 100),
+      out, key = "k", versionCol = "v", checkpointDir = ckpt())
+    try {
+      // the filter leaves the first batch without a row
+      stream.addData((0 until 5).map(k => (k, k)))
+      TimeLimits.failAfter(60.seconds)(q.processAllAvailable())
+      assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      assert(!Files.exists(java.nio.file.Paths.get(out)))
+      assert(upsertSiblings(out).isEmpty)
+      // and the next batch with rows creates the table
+      stream.addData(Seq((7, 107), (8, 108)))
+      TimeLimits.failAfter(60.seconds)(q.processAllAvailable())
+    } finally q.stop()
+    assert(spark.read.parquet(out).as[(Int, Int)].collect().toSeq.sorted === Seq((7, 107), (8, 108)))
+  }
+
+  test("a failing foreachBatchUpsert merge write fails the batch and keeps the table") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-upsert-fail").toString + "/table"
+    val stream = MemoryStream[(Int, Int)]
+    // a negative version raises inside the merge write, the batch's
+    // only job
+    val rows = stream.toDF().toDF("k", "v")
+      .withColumn("v", when($"v" < 0, raise_error(lit("negative version"))).otherwise($"v"))
+    val q = EventStreams.foreachBatchUpsert(rows, out, key = "k", versionCol = "v",
+      checkpointDir = ckpt())
+    try {
+      stream.addData(Seq((1, 1), (2, 1)))
+      q.processAllAvailable()
+      stream.addData(Seq((1, 2), (3, -1)))
+      val e = intercept[StreamingQueryException](
+        TimeLimits.failAfter(60.seconds)(q.processAllAvailable()))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => Option(c.getMessage).exists(_.contains("negative version"))), e)
+      assert(!q.isActive)
+    } finally q.stop()
+    assert(spark.read.parquet(out).as[(Int, Int)].collect().toSeq.sorted === Seq((1, 1), (2, 1)))
+  }
+
+  test("a foreachBatchUpsert merge writes as many files as the stored table's size needs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def parts(dir: String) = fileTimes(dir).keys.count(f => f.startsWith("part-") && f.endsWith(".parquet"))
+    def run(maxPartitionBytes: Option[String]): Int = {
+      val key = "spark.sql.files.maxPartitionBytes"
+      val out = Files.createTempDirectory("graft-upsert-files").toString + "/table"
+      val stream = MemoryStream[(Int, Int)]
+      // the stream's session is cloned at start, with this setting
+      val before = spark.conf.getOption(key)
+      maxPartitionBytes.foreach(spark.conf.set(key, _))
+      val q = try EventStreams.foreachBatchUpsert(stream.toDF().toDF("k", "v"), out,
+        key = "k", versionCol = "v", checkpointDir = ckpt())
+        finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      try (0 until 3).foreach { i =>
+        stream.addData((0 until 400).map(k => (k + 100 * i, i)))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.read.parquet(out).count() === 600L)
+      parts(out)
+    }
+    // a few KB under the default 128 MB: one file, not one per shuffle
+    // partition
+    assert(run(None) === 1)
+    // a table several times the setting spreads over several files
+    assert(run(Some("1k")) > 1)
   }
 
   test("a stateful checkpoint keeps its partition count across a session-profile change") {

@@ -19,12 +19,18 @@ carry `sql.streaming.queryId` and `streaming.sql.batchId`; anything else
 (query, batch) reports
 
   jobs          jobs started
+  job_s         summed wall time of those jobs, submission to completion,
+                seconds
   stages        stages that ran (skipped stages are not counted)
   tasks         tasks that ended
   task_s        summed executor run time of those tasks, seconds
   task_cpu_s    summed executor CPU time of those tasks, seconds; the gap
                 to task_s is time the tasks spent waiting (I/O, locks,
                 forked processes, compilation on another thread)
+  deser_s       summed executor deserialize time of those tasks, seconds:
+                the time each task spends deserializing its task binary
+                (the stage's RDD and closure) before it runs, which a job
+                pays once per task
   state_tasks   tasks that opened a state store (the stateful operator's
                 "number of state store instances" metric); a stage that
                 only reads a cached batch lists the StateStoreRDD among
@@ -61,12 +67,14 @@ from collections import defaultdict
 QUERY = "sql.streaming.queryId"
 BATCH = "streaming.sql.batchId"
 STATE_STORES = "number of state store instances"
-COLS = ("jobs", "stages", "tasks", "task_s", "task_cpu_s", "state_tasks", "listing_jobs")
+COLS = ("jobs", "job_s", "stages", "tasks", "task_s", "task_cpu_s", "deser_s", "state_tasks",
+        "listing_jobs")
 
 
 def breakdown(lines, where):
     stage_owner = {}   # stage id -> (query, batch) of the latest job listing it
     ran = {}           # (stage id, attempt) -> (query, batch) it ran for
+    started = {}       # job id -> ((query, batch), submission time in ms)
     rows = defaultdict(lambda: dict.fromkeys(COLS, 0))
     for line in lines:
         e = json.loads(line)
@@ -80,10 +88,14 @@ def breakdown(lines, where):
             key = (props.get(QUERY, "-"), props.get(BATCH, "-"))
             row = rows[key]
             row["jobs"] += 1
+            started[e["Job ID"]] = (key, e.get("Submission Time", 0))
             if props.get("spark.job.description", "").startswith("Listing leaf files"):
                 row["listing_jobs"] += 1
             for sid in e["Stage IDs"]:
                 stage_owner[sid] = key
+        elif kind == "SparkListenerJobEnd" and e["Job ID"] in started:
+            key, t0 = started.pop(e["Job ID"])
+            rows[key]["job_s"] += (e.get("Completion Time", t0) - t0) / 1e3
         elif kind == "SparkListenerStageSubmitted":
             info = e["Stage Info"]
             key = stage_owner.get(info["Stage ID"])
@@ -98,6 +110,7 @@ def breakdown(lines, where):
                 metrics = e.get("Task Metrics") or {}
                 row["task_s"] += metrics.get("Executor Run Time", 0) / 1e3
                 row["task_cpu_s"] += metrics.get("Executor CPU Time", 0) / 1e9
+                row["deser_s"] += metrics.get("Executor Deserialize Time", 0) / 1e3
                 accs = (e.get("Task Info") or {}).get("Accumulables", [])
                 if any(a.get("Name") == STATE_STORES for a in accs):
                     row["state_tasks"] += 1
@@ -150,9 +163,9 @@ def batch_order(key):
 
 
 def fmt(label, batch, row):
-    return "%-36s %6s %5d %6d %6d %8.2f %10.2f %11d %12d" % (
-        label, batch, row["jobs"], row["stages"], row["tasks"], row["task_s"],
-        row["task_cpu_s"], row["state_tasks"], row["listing_jobs"])
+    return "%-36s %6s %5d %6.2f %6d %6d %8.2f %10.2f %7.2f %11d %12d" % (
+        label, batch, row["jobs"], row["job_s"], row["stages"], row["tasks"], row["task_s"],
+        row["task_cpu_s"], row["deser_s"], row["state_tasks"], row["listing_jobs"])
 
 
 def main():
@@ -173,7 +186,7 @@ def main():
         return
     rows = breakdown(event_lines(args.log), where)
 
-    print("%-36s %6s %5s %6s %6s %8s %10s %11s %12s" % (("query", "batch") + COLS))
+    print("%-36s %6s %5s %6s %6s %6s %8s %10s %7s %11s %12s" % (("query", "batch") + COLS))
     per_query = defaultdict(lambda: dict.fromkeys(COLS, 0))
     batches = defaultdict(int)
     for key in sorted(rows, key=batch_order):
